@@ -36,45 +36,44 @@ from pixie_spark.functions.math_ops import bin as _bin
 _INTERNAL = ("_sdf", "_rolling_ns", "_streaming", "_groups")
 
 
-def _realize_meta(sdf: SparkDataFrame, value, out_name: str) -> SparkDataFrame:
-    """Realize a MetadataExpr / (possibly nested) MetadataCall into a
-    concrete column ``out_name`` via the bound resolver's broadcast
-    joins. Nested call args are materialized into temp columns first."""
+def _realize_meta(sdf: SparkDataFrame, value, columns: list[str]) -> tuple[SparkDataFrame, Column]:
+    """Resolve a MetadataExpr / MetadataCall / DeferredCol, nested any
+    way, against the bound resolver: returns ``sdf`` with every lookup's
+    broadcast joins added and the value as a Column over it. ``columns``
+    are the frame's own columns, fixed before the first join; callers
+    project once (_project_meta)."""
     from pixie_spark.api import _get_metadata_resolver
     from pixie_spark.functions.metadata import SCALAR_LOOKUPS
 
     resolver = _get_metadata_resolver()
     if isinstance(value, MetadataExpr):
-        return resolver.resolve_ctx(sdf, value.attr, out_name)
-    if isinstance(value, MetadataCall):
-        arg = value.arg
-        tmp = None
-        if is_meta_sentinel(arg):
-            tmp = f"__meta_arg_{out_name}"
-            sdf = _realize_meta(sdf, arg, tmp)
-            key = F.col(tmp)
-        elif isinstance(arg, Column):
-            key = arg
-        else:
-            key = F.lit(arg)
-        hops = SCALAR_LOOKUPS[value.name]
-        out = resolver.lookup_expr(
-            sdf, hops, key, out_name, fallback_to_key=value.fallback_to_key
-        )
-        return out.drop(tmp) if tmp else out
+        return resolver.ctx(sdf, value.attr, columns)
+    args = []
+    for a in value.args if isinstance(value, DeferredCol) else [value.arg]:
+        if is_meta_sentinel(a):
+            sdf, a = _realize_meta(sdf, a, columns)
+        args.append(a)
     if isinstance(value, DeferredCol):
-        realized, temps = [], []
-        for i, a in enumerate(value.args):
-            if is_meta_sentinel(a):
-                tmp = f"__dc_{out_name}_{i}"
-                sdf = _realize_meta(sdf, a, tmp)
-                temps.append(tmp)
-                realized.append(F.col(tmp))
-            else:
-                realized.append(a)
-        sdf = sdf.withColumn(out_name, value.builder(*realized))
-        return sdf.drop(*temps)
-    raise TypeError(f"not a metadata expression: {value!r}")
+        return sdf, value.builder(*args)
+    key = args[0] if isinstance(args[0], Column) else F.lit(args[0])
+    return resolver.lookup(
+        sdf, SCALAR_LOOKUPS[value.name], key, fallback_to_key=value.fallback_to_key
+    )
+
+
+def _project_meta(sdf: SparkDataFrame, value, name: str | None = None) -> SparkDataFrame:
+    """``sdf`` with metadata ``value`` assigned to column ``name`` — in
+    place if it exists, else appended — or, with no name, filtered by it:
+    the lookup joins then ONE projection that keeps the frame's column
+    order and drops every join temp."""
+    columns = sdf.columns
+    joined, value = _realize_meta(sdf, value, columns)
+    if name is None:
+        joined = joined.where(value)
+    out = [value.alias(name) if c == name else F.col(f"`{c.replace('`', '``')}`") for c in columns]
+    if name is not None and name not in columns:
+        out.append(value.alias(name))
+    return joined.select(*out)
 
 
 class MetadataExpr:
@@ -110,7 +109,7 @@ class MetadataCall:
 class DeferredCol:
     """A scalar expression over unrealized metadata: builder(*args) where
     sentinel args (MetadataExpr / MetadataCall / DeferredCol) are realized
-    into temp columns first. Lets metadata calls compose inside ordinary
+    into lookup Columns first. Lets metadata calls compose inside ordinary
     expressions — px.select(cond, px.pod_id_to_pod_name(...),
     px.nslookup(...)), `df.ctx['ns'] == ns and df.service != ''` — the
     way the reference planner folds metadata UDFs into Map expressions."""
@@ -128,14 +127,7 @@ def is_meta_sentinel(x) -> bool:
     return isinstance(x, (MetadataExpr, MetadataCall, DeferredCol))
 
 
-# backward-compat name (filter-predicate special case of DeferredCol)
-MetadataPredicate = DeferredCol
-
-
 class CtxAccessor:
-    def __init__(self, owner: "PxDataFrame"):
-        self._owner = owner
-
     def __getitem__(self, attr: str) -> MetadataExpr:
         return MetadataExpr(attr)
 
@@ -165,7 +157,7 @@ class PxDataFrame:
     @property
     def ctx(self) -> CtxAccessor:
         """K8s metadata accessor (dataframe.h:422). df.svc = df.ctx['service']."""
-        return CtxAccessor(self)
+        return CtxAccessor()
 
     # --- column access / assignment (Map operator) --------------------------
 
@@ -193,7 +185,7 @@ class PxDataFrame:
 
     def _assign(self, name: str, value: Any) -> None:
         if is_meta_sentinel(value):
-            object.__setattr__(self, "_sdf", _realize_meta(self._sdf, value, name))
+            object.__setattr__(self, "_sdf", _project_meta(self._sdf, value, name))
             return
         col = value if isinstance(value, Column) else F.lit(value)
         object.__setattr__(self, "_sdf", self._sdf.withColumn(name, col))
@@ -213,9 +205,7 @@ class PxDataFrame:
                 raise column_not_found(missing[0], self._sdf.columns)
             return self._wrap(self._sdf.select(*[self._sdf[c] for c in key]))
         if is_meta_sentinel(key):
-            tmp = "__meta_pred"
-            sdf = _realize_meta(self._sdf, key, tmp)
-            return self._wrap(sdf.where(F.col(tmp)).drop(tmp))
+            return self._wrap(_project_meta(self._sdf, key))
         if isinstance(key, Column):
             # filter (dataframe.h:206); compiler_test.cc:672 requires the
             # predicate to be boolean — a non-boolean Column fails Spark

@@ -117,8 +117,8 @@ def pagerank(
         # the same rank rows survive the filter in the same partition
         # order (anti vs semi is only the polarity of the same
         # broadcast-hash lookup), so partial sums and their exchange
-        # merge are bit-identical — adjudicated with the C9 bit-pattern
-        # harness (see OPTIMIZATION_r12.md).
+        # merge are bit-identical (VERDICT.md, round 12 optimization
+        # audit, pagerank row).
         dangling_nodes = (
             nodes.join(has_out, "node", "left_anti").transform(materialize)
         )

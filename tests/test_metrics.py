@@ -89,8 +89,11 @@ def test_flagship_net_flow_graph(spark, conn):
             F.sum("bytes_recv_delta").alias("bytes_recv"),
         )
     )
-    resolved = r.resolve_upid(edges, ["pod_name", "service_name"])
-    rows = resolved.where(F.col("service_name").isNotNull()).collect()
+    px.set_context(spark, tables={}, metadata=r)
+    df = px.from_spark(edges)
+    df.pod_name = df.ctx["pod_name"]
+    df.service_name = df.ctx["service_name"]
+    rows = df.to_spark().where(F.col("service_name") != "").collect()
     assert rows
     assert all(row["bytes_sent"] >= 0 and row["bytes_recv"] >= 0 for row in rows)
     assert all("/" in row["service_name"] for row in rows)

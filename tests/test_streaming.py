@@ -166,16 +166,21 @@ def test_stream_static_metadata_join(spark, events_dir, tmp_path):
     stream-static broadcast join against the k8s pods dimension →
     watermarked rolling agg → memory sink. Stream-static joins are how
     ctx[...] metadata resolution works in streaming mode."""
+    import pixie_spark.api as px
     from pixie_spark.functions.metadata import MetadataResolver
     from pixie_spark.sources.fixtures import k8s_fixtures
 
     pods, services = k8s_fixtures(spark)
-    resolver = MetadataResolver(pods, services)
+    px.set_context(spark, tables={}, metadata=MetadataResolver(pods, services))
+
+    def with_service(sdf):
+        df = px.from_spark(sdf)
+        df.service_name = df.ctx["service_name"]
+        return df.to_spark().where(F.col("service_name") != "")
 
     stream = st.stream_table(spark, events_dir, HTTP_EVENTS, max_files_per_trigger=2)
-    enriched = resolver.resolve_upid(stream, ["service_name"])
     agg = st.rolling_agg(
-        enriched.where(F.col("service_name").isNotNull()),
+        with_service(stream),
         "30s",
         {
             "n": F.count(F.lit(1)),
@@ -201,9 +206,7 @@ def test_stream_static_metadata_join(spark, events_dir, tmp_path):
         got = spark.table("stream_static_test")
         # batch twin over the same data must agree
         batch = st.rolling_agg(
-            resolver.resolve_upid(
-                spark.read.schema(HTTP_EVENTS).parquet(events_dir), ["service_name"]
-            ).where(F.col("service_name").isNotNull()),
+            with_service(spark.read.schema(HTTP_EVENTS).parquet(events_dir)),
             "30s",
             {
                 "n": F.count(F.lit(1)),
