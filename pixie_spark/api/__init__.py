@@ -734,7 +734,7 @@ def __getattr__(name: str):
         factory.__name__ = name
         factory.__doc__ = (
             f"px.{name}: scalar metadata lookup (metadata_ops.cc) realized "
-            "as a broadcast dimension join on assignment."
+            "on assignment as a MetadataResolver.lookup."
         )
         return factory
     raise AttributeError(f"module 'px' has no attribute {name!r}")

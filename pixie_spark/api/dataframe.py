@@ -10,7 +10,8 @@ Semantics choices:
 - ``df[df.x > 1]`` filter, ``df[['a','b']]`` keep (dataframe.h:184-206)
 - ``df.agg(out=('col', 'px.mean'))`` tuple syntax resolved through the
   function registry (dataframe.h:230)
-- ``df.ctx['service']`` resolves via broadcast metadata joins
+- ``df.ctx['service']`` resolves via metadata lookups: in-plan map
+  lookups on small k8s dims, broadcast joins on large ones
   (dataframe.h:422, convert_metadata_rule.cc)
 - ``df.rolling(w)`` bins time_ into tumbling windows for the next agg
   (dataframe.h:381, rolling_ir.h:44-57)
@@ -39,9 +40,9 @@ _INTERNAL = ("_sdf", "_rolling_ns", "_streaming", "_groups")
 def _realize_meta(sdf: SparkDataFrame, value, columns: list[str]) -> tuple[SparkDataFrame, Column]:
     """Resolve a MetadataExpr / MetadataCall / DeferredCol, nested any
     way, against the bound resolver: returns ``sdf`` with every lookup's
-    broadcast joins added and the value as a Column over it. ``columns``
-    are the frame's own columns, fixed before the first join; callers
-    project once (_project_meta)."""
+    joins added (none for inlined dims) and the value as a Column over
+    it. ``columns`` are the frame's own columns, fixed before the first
+    join; callers project once (_project_meta)."""
     from pixie_spark.api import _get_metadata_resolver
     from pixie_spark.functions.metadata import SCALAR_LOOKUPS
 
@@ -64,8 +65,8 @@ def _realize_meta(sdf: SparkDataFrame, value, columns: list[str]) -> tuple[Spark
 def _project_meta(sdf: SparkDataFrame, value, name: str | None = None) -> SparkDataFrame:
     """``sdf`` with metadata ``value`` assigned to column ``name`` — in
     place if it exists, else appended — or, with no name, filtered by it:
-    the lookup joins then ONE projection that keeps the frame's column
-    order and drops every join temp."""
+    the lookup joins (if any) then ONE projection that keeps the frame's
+    column order and drops every join temp."""
     columns = sdf.columns
     joined, value = _realize_meta(sdf, value, columns)
     if name is None:
@@ -96,7 +97,7 @@ class MetadataExpr:
 class MetadataCall:
     """Sentinel for a scalar metadata UDF call — px.ip_to_pod_id(col),
     px.pod_id_to_pod_name(...), px.nslookup(...). Realized on assignment
-    as a broadcast-lookup join chain (functions.metadata.SCALAR_LOOKUPS).
+    as a chain of metadata lookups (functions.metadata.SCALAR_LOOKUPS).
     ``arg`` may be a Column, a MetadataExpr, or another MetadataCall
     (calls nest in the corpus: pod_id_to_pod_name(ip_to_pod_id(ip)))."""
 

@@ -19,8 +19,8 @@ materialized, so after iteration 1 only the small rank frame moves) and
 one groupBy(dst) partial+final aggregate. The dangling mass is a 1-row
 aggregate FRAME folded into the rank-update plan via broadcast
 crossJoin — it never touches the driver; since r12 it is a semi-join of
-the ranks against the HOISTED, materialized dangling-node set (tiny —
-broadcast) instead of a per-iteration anti-join against the full
+the ranks against the HOISTED, materialized dangling-node set (broadcast
+when small) instead of a per-iteration anti-join against the full
 has_out set. When the graph has NO dangling nodes (decided once up
 front — the dangling set is fixed across iterations) the mass is
 exactly 0.0 every round and the whole dangling leg is skipped,
@@ -49,6 +49,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pixie_spark.materialize import _strategy, materialize
+
+# Largest dangling-node set broadcast into the per-iteration semi-join.
+DANGLING_BROADCAST_MAX = 200_000
 
 
 def out_degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -111,7 +114,7 @@ def pagerank(
     if n_dangling:
         # r12 (VERDICT r11 #3): the dangling-node set is HOISTED and
         # materialized once — per iteration the mass is a semi-join of
-        # the rank frame against this tiny broadcast frame, where the
+        # the rank frame against this (usually small) set, where the
         # former per-iteration anti-join rebuilt a broadcast over the
         # full has_out set every round. Summation semantics unchanged:
         # the same rank rows survive the filter in the same partition
@@ -122,6 +125,13 @@ def pagerank(
         dangling_nodes = (
             nodes.join(has_out, "node", "left_anti").transform(materialize)
         )
+        # the broadcast hint ships the whole set to every executor each
+        # iteration; on sink-heavy graphs (crawl frontiers, citation
+        # graphs) that set is large, so above DANGLING_BROADCAST_MAX the
+        # semi-join is left unhinted for the planner to choose
+        # (VERDICT.md round 12, What's wrong #2)
+        if n_dangling <= DANGLING_BROADCAST_MAX:
+            dangling_nodes = F.broadcast(dangling_nodes)
     # Lazy cuts are gated (r12, ADVICE r11) to the dangling-free path
     # under the localCheckpoint strategy:
     # - with dangling nodes, each iteration's mass aggregate reads the
@@ -176,9 +186,9 @@ def pagerank(
             # ranks. `ranks` is always a MATERIALIZED cut on this path
             # (eager cuts — see lazy_cuts above), so the broadcast build
             # is a cheap aggregate over stored blocks.
-            dangling = ranks.join(
-                F.broadcast(dangling_nodes), "node", "left_semi"
-            ).agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling"))
+            dangling = ranks.join(dangling_nodes, "node", "left_semi").agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling")
+            )
             damp_term = F.coalesce(F.col("inflow"), F.lit(0.0)) + F.col(
                 "__dangling"
             ) / F.lit(float(n))

@@ -35,11 +35,14 @@ Spark-first mapping, two tiers:
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 class StreamingScriptRun:
@@ -137,6 +140,8 @@ class StreamingScriptRun:
                 try:
                     self._refresh()
                 except Exception as e:  # noqa: BLE001 — surfaced via handle
+                    # logged when it happens; await_drained raises them all
+                    _log.exception("streaming refresh failed at batch_id=%d", batch_id)
                     self.refresh_errors.append(f"{type(e).__name__}: {e}")
 
         return sink

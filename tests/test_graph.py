@@ -184,3 +184,46 @@ def test_no_per_iteration_driver_actions(spark, monkeypatch):
     # delta read); only the 4 setup checkpoints are eager
     assert calls["ckpt_lazy"] == max_iter
     assert calls["ckpt_eager"] == 4
+
+
+def _semi_join_lines(spark, monkeypatch, edges):
+    """The LeftSemi join lines of the rank-update plans pagerank
+    materializes, with auto-broadcast off (only a hint can broadcast)."""
+    import pixie_spark.operators.graph as graph
+
+    lines = []
+    real = graph.materialize
+
+    def spy(df, *a, **k):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        lines.extend(ln for ln in plan.splitlines() if "LeftSemi" in ln)
+        return real(df, *a, **k)
+
+    monkeypatch.setattr(graph, "materialize", spy)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        got = {r["node"]: r["rank"] for r in pagerank(edges, max_iter=20, tol=0.0).collect()}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        monkeypatch.setattr(graph, "materialize", real)
+    return got, lines
+
+
+def test_large_dangling_set_is_not_broadcast(spark, monkeypatch):
+    """Above DANGLING_BROADCAST_MAX dangling nodes the per-iteration
+    semi-join carries no broadcast hint (VERDICT.md round 12, What's
+    wrong #2) and the ranks still match the numpy reference; at or
+    below it the hint stays."""
+    import pixie_spark.operators.graph as graph
+
+    got, lines = _semi_join_lines(spark, monkeypatch, _edge_df(spark))
+    assert lines and all("BroadcastHashJoin" in ln for ln in lines), lines
+
+    monkeypatch.setattr(graph, "DANGLING_BROADCAST_MAX", 0)
+    got, lines = _semi_join_lines(spark, monkeypatch, _edge_df(spark))
+    assert lines and not any("Broadcast" in ln for ln in lines), lines
+    ref = _np_pagerank(EDGES, iters=20)
+    assert set(got) == set(ref)
+    for v in ref:
+        assert got[v] == pytest.approx(ref[v], rel=1e-12), v

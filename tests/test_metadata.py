@@ -1,12 +1,20 @@
-"""K8s metadata layer: ctx[...] resolution via broadcast joins against
-the FIXTURES.md dimension tables, incl. the orphan-upid fallback path."""
+"""K8s metadata layer: ctx[...] resolution against the FIXTURES.md
+dimension tables, incl. the orphan-upid fallback path. Small dims are
+inlined as literal maps, dims above INLINE_MAX_KEYS keys join; both
+plan shapes are pinned, and the two paths must give identical rows."""
 
 import pytest
 from pyspark.sql import functions as F
 
 import pixie_spark.api as px
-from pixie_spark.functions.metadata import SCALAR_LOOKUPS, MetadataResolver
-from pixie_spark.plans import assert_broadcast_join
+from pixie_spark.functions import metadata
+from pixie_spark.functions.metadata import (
+    CTX_LOOKUPS,
+    INLINE_MAX_KEYS,
+    SCALAR_LOOKUPS,
+    MetadataResolver,
+)
+from pixie_spark.plans import assert_broadcast_join, plan_string
 from pixie_spark.sources.fixtures import http_events_fixture, k8s_fixtures
 
 
@@ -15,6 +23,26 @@ def fixtures(spark):
     pods, services = k8s_fixtures(spark)
     events = http_events_fixture(spark, n=500)
     return pods, services, events
+
+
+@pytest.fixture(scope="module")
+def above_cap(spark, fixtures):
+    """Pods and services one key past INLINE_MAX_KEYS, so every hop is a
+    join; the services dim is padded with services no pod runs. The
+    same 500 events: their upids are the first 10 pods'."""
+    pods, services = k8s_fixtures(spark, n_pods=INLINE_MAX_KEYS + 1)
+    pad = spark.createDataFrame(
+        [
+            (f"s-pad-{i}", f"prod/pad-{i}", "prod", None, "[]")
+            for i in range(INLINE_MAX_KEYS + 1 - services.count())
+        ],
+        services.schema,
+    )
+    return pods, services.unionByName(pad), fixtures[2]
+
+
+def _joins(df) -> int:
+    return plan_string(df).count("Join")
 
 
 def _with_ctx(spark, resolver, sdf, **attrs):
@@ -85,25 +113,28 @@ def test_restart_epochs_no_fanout(spark, fixtures):
     assert got["pod_name"].endswith("-r2")
 
 
-def test_metadata_join_is_broadcast(spark, fixtures):
+def test_metadata_join_is_broadcast(spark, fixtures, above_cap):
+    """Small dims compile to no join at all (an in-plan map lookup);
+    dims above INLINE_MAX_KEYS keep one broadcast join per hop."""
     pods, services, events = fixtures
+    for attr in ("pod", "service"):
+        out = _with_ctx(spark, MetadataResolver(pods, services), events, x=attr)
+        assert _joins(out) == 0 and "BroadcastExchange" not in plan_string(out)
+    pods, services, events = above_cap
     out = _with_ctx(spark, MetadataResolver(pods, services), events, pod="pod")
     assert_broadcast_join(out, 1)
     out = _with_ctx(spark, MetadataResolver(pods, services), events, svc="service")
     assert_broadcast_join(out, 2)
 
 
-def test_ctx_builds_one_join_per_hop_and_one_projection(spark, fixtures, monkeypatch):
-    """df.x = df.ctx['service'] builds an aliased join per hop against
-    dims prepared once per resolver, then one projection — and probes
-    the schema of none of the frames it builds (each probe re-analyses
-    the joined plan)."""
-    pods, services, events = fixtures
-    r = MetadataResolver(pods, services)
-    px.set_context(spark, tables={}, metadata=r)
+def _built_by_second_service_read(spark, resolver, events, monkeypatch):
+    """df.first = df.ctx['service'], then the DataFrames built by
+    df.second = df.ctx['service'], the prepared dims from before the
+    second read, and the final frame."""
+    px.set_context(spark, tables={}, metadata=resolver)
     df = px.from_spark(events)
     df.first = df.ctx["service"]
-    prepared = dict(r._prepared)
+    prepared = dict(resolver._prepared)
     assert len(prepared) == 2  # upid → service_id, service_id → service_name
 
     built = []
@@ -119,12 +150,34 @@ def test_ctx_builds_one_join_per_hop_and_one_projection(spark, fixtures, monkeyp
     df.second = df.ctx["service"]
     monkeypatch.undo()
 
-    assert len(built) == 2 * 2 + 1  # (alias + join) per hop, one select
     assert [f for f in built if "schema" in f.__dict__] == []
-    assert r._prepared.keys() == prepared.keys()
-    assert all(r._prepared[k] is prepared[k] for k in prepared)
+    assert resolver._prepared.keys() == prepared.keys()
+    assert all(resolver._prepared[k] is prepared[k] for k in prepared)
     out = df.to_spark()
     assert out.columns == events.columns + ["first", "second"]
+    return built, out
+
+
+def test_ctx_builds_one_join_per_hop_and_one_projection(
+    spark, fixtures, above_cap, monkeypatch
+):
+    """df.x = df.ctx['service'] against dims prepared once per resolver
+    builds one projection — over the frame itself for small dims, over
+    an aliased join per hop for dims above INLINE_MAX_KEYS — and probes
+    the schema of none of the frames it builds (each probe re-analyses
+    the joined plan)."""
+    pods, services, events = fixtures
+    built, out = _built_by_second_service_read(
+        spark, MetadataResolver(pods, services), events, monkeypatch
+    )
+    assert len(built) == 1  # the projection
+    assert _joins(out) == 0 and "BroadcastExchange" not in plan_string(out)
+
+    pods, services, events = above_cap
+    built, out = _built_by_second_service_read(
+        spark, MetadataResolver(pods, services), events, monkeypatch
+    )
+    assert len(built) == 2 * 2 + 1  # (alias + join) per hop, one select
     plan = out._jdf.queryExecution().analyzed().toString()
     assert plan.count("Join LeftOuter") == 4
 
@@ -208,17 +261,12 @@ def test_flagship_http_request_stats(spark, fixtures):
     assert any_q["p50"] is not None and any_q["p99"] >= any_q["p50"]
 
 
-def test_flagship_service_flow_graph(spark, fixtures):
-    """Service-graph script re-expressed (ref workload corpus:
-    src/pxl_scripts/px/{net_flow_graph,dns_flow_graph}/ — resolve both
-    endpoints to services, aggregate edges). Server side via upid ctx,
-    client side via ip→pod→service broadcast lookups."""
-    pods, services, events = fixtures
+def _service_edges(spark, pods, services, events):
     px.set_context(spark, tables={}, metadata=MetadataResolver(pods, services))
     df = px.from_spark(events)
     df.server_svc = df.ctx["service_name"]
     df.client_svc = px.pod_id_to_service_name(px.ip_to_pod_id(df.remote_addr))
-    edges = (
+    return (
         df.to_spark()
         .where((F.col("server_svc") != "") & (F.col("client_svc") != ""))
         .groupBy("client_svc", "server_svc")
@@ -228,14 +276,31 @@ def test_flagship_service_flow_graph(spark, fixtures):
             F.percentile_approx("latency", 0.99).alias("latency_p99"),
         )
     )
+
+
+def test_flagship_service_flow_graph(spark, fixtures, above_cap):
+    """Service-graph script re-expressed (ref workload corpus:
+    src/pxl_scripts/px/{net_flow_graph,dns_flow_graph}/ — resolve both
+    endpoints to services, aggregate edges). Server side via upid ctx,
+    client side via ip→pod→service lookups: map lookups with no join on
+    small dims, broadcast joins on dims above INLINE_MAX_KEYS."""
+    from pixie_spark.plans import assert_no_cartesian
+
+    edges = _service_edges(spark, *fixtures)
     rows = edges.collect()
     assert rows, "expected resolvable service->service edges"
     assert sum(r2["n_requests"] for r2 in rows) > 300  # 90% internal x 97% known upids
     names = {r2["client_svc"] for r2 in rows} | {r2["server_svc"] for r2 in rows}
     assert all("/" in n for n in names)
-    from pixie_spark.plans import assert_no_cartesian
     assert_no_cartesian(edges)
-    assert_broadcast_join(edges, 3)
+    assert _joins(edges) == 0 and "BroadcastExchange" not in plan_string(edges)
+
+    large = _service_edges(spark, *above_cap)
+    assert sorted(large.drop("latency_p99").collect()) == sorted(
+        edges.drop("latency_p99").collect()
+    )
+    assert_no_cartesian(large)
+    assert_broadcast_join(large, 3)
 
 
 def test_pod_and_service_id_accessors(spark, fixtures):
@@ -403,3 +468,156 @@ px.display(df[df.failure][['svc', 'req_path', 'resp_status']], 'failures')
     assert all(r["resp_status"] >= 400 for r in res["failures"].collect())
     named = [r for r in stats if r["svc"] != ""]
     assert named and all(r["q"]["p99"] >= r["q"]["p50"] for r in named)
+
+
+def _parity_dims(spark):
+    """(pods, services, containers) with the edge cases a lookup must
+    get right on both paths: a restarted pod (a second, later epoch
+    under a new name), a pod with null values, one with null keys."""
+    from pixie_spark.sources.fixtures import k8s_containers_fixture
+
+    pods, services = k8s_fixtures(spark)
+    restarted = (
+        pods.where(F.col("pod_id") == "pod-id-0000")
+        .withColumn("start_time", F.col("start_time") + F.lit(10**9))
+        .withColumn("pod_name", F.concat(F.col("pod_name"), F.lit("-r2")))
+    )
+    nulls = spark.createDataFrame(
+        [
+            ({"high": 7 << 32 | 7000, "low": 0}, "pod-id-nulls", "prod/nulls",
+             None, None, "10.9.9.9", None, None, None, None, None, None),
+            ({"high": 7 << 32 | 7001, "low": 0}, "pod-id-nokeys", None,
+             "prod", "node-1", None, "s-api", None, None, "Running", 1, None),
+        ],
+        pods.schema,
+    )
+    containers = k8s_containers_fixture(spark)
+    containers = containers.unionByName(
+        spark.createDataFrame(
+            [({"high": 7 << 32 | 7000, "low": 0}, "containerd://nulls", None, None, None)],
+            containers.schema,
+        )
+    )
+    return pods.unionByName(restarted).unionByName(nulls), services, containers
+
+
+def _parity_probe(spark, pods, services, containers):
+    """One row per probe: every key value the dims hold, a miss and a
+    null for each key column (upid, pod_id, pod_name, pod_ip, service_id,
+    service_name, container_id), cycled against each other."""
+    def keys(df, col, miss):
+        return [r[0] for r in df.select(col).distinct().collect()] + [miss, None]
+
+    pools = {
+        "upid": [
+            None if u is None else (u["high"], u["low"])
+            for u in keys(pods, "upid", {"high": 9 << 32 | 9999, "low": 0})
+        ],
+        "pod_id": keys(pods, "pod_id", "pod-id-bogus"),
+        "pod_name": keys(pods, "pod_name", "prod/missing"),
+        "pod_ip": keys(pods, "pod_ip", "203.0.113.9"),
+        "service_id": keys(services, "service_id", "s-missing"),
+        "service_name": keys(services, "service_name", "prod/missing"),
+        "container_id": keys(containers, "container_id", "containerd://missing"),
+    }
+    n = max(len(p) for p in pools.values())
+    rows = [(i, *(p[i % len(p)] for p in pools.values())) for i in range(n)]
+    schema = "rid long, upid struct<high: bigint, low: bigint>, " + ", ".join(
+        f"{c} string" for c in list(pools)[1:]
+    )
+    return spark.createDataFrame(rows, schema)
+
+
+def _resolve_everything(spark, resolver, probe) -> dict:
+    """{rid: row} with a column per SCALAR_LOOKUPS entry and per
+    CTX_LOOKUPS attr (on a upid frame and on a pod_id frame)."""
+    px.set_context(spark, tables={}, metadata=resolver)
+    out = {}
+    for key, sdf in (("upid", probe), ("pod_id", probe.drop("upid"))):
+        df = px.from_spark(sdf)
+        for k, attr in CTX_LOOKUPS:
+            if k == key:
+                df[f"ctx_{attr}"] = df.ctx[attr]
+        if key == "upid":
+            for name, hops in SCALAR_LOOKUPS.items():
+                df[f"fn_{name}"] = getattr(px, name)(df[hops[0][1]])
+        for r in df.to_spark().collect():
+            out.setdefault(r["rid"], {}).update({f"{key}.{c}": v for c, v in r.asDict().items()})
+    return out
+
+
+def test_inline_and_join_paths_agree(spark, monkeypatch):
+    """Every SCALAR_LOOKUPS entry and every CTX_LOOKUPS attr gives the
+    same rows with small dims inlined as maps and with the cap below 0
+    (every dim joins, the empty one too): orphan upids, a restarted pod,
+    null keys and values, px.nslookup on external IPs, a non-string
+    value, and an empty dim."""
+    from pyspark.sql import Column, DataFrame
+
+    pods, services, containers = _parity_dims(spark)
+    empty_containers = spark.createDataFrame([], containers.schema)
+    for dims in ((pods, services, containers), (pods, services, empty_containers)):
+        probe = _parity_probe(spark, *dims)
+        got = {}
+        for cap, table_type in ((INLINE_MAX_KEYS, Column), (-1, DataFrame)):
+            monkeypatch.setattr(metadata, "INLINE_MAX_KEYS", cap)
+            resolver = MetadataResolver(*dims)
+            got[cap] = _resolve_everything(spark, resolver, probe)
+            assert all(isinstance(t, table_type) for t, _ in resolver._prepared.values())
+        monkeypatch.undo()
+        inline, joined = got[INLINE_MAX_KEYS], got[-1]
+        assert inline == joined
+
+        rows = list(inline.values())
+        by = {r["upid.pod_ip"]: r for r in rows}
+        assert by["203.0.113.9"]["upid.fn_nslookup"] == "203.0.113.9"
+        assert by[None]["upid.fn_nslookup"] is None and by[None]["upid.fn_ip_to_pod_id"] == ""
+        # the restarted pod's latest epoch wins, on every key
+        assert by["10.0.0.1"]["upid.fn_nslookup"].endswith("-r2")
+        r2 = next(r for r in rows if r["upid.pod_id"] == "pod-id-0000")
+        assert r2["pod_id.ctx_pod"].endswith("-r2")
+        nulls = next(r for r in rows if r["upid.pod_id"] == "pod-id-nulls")
+        assert nulls["pod_id.ctx_namespace"] == "" and nulls["pod_id.ctx_service"] == ""
+        miss = next(r for r in rows if r["upid.pod_name"] == "prod/missing")
+        assert miss["upid.fn_pod_name_to_start_time"] is None
+        hit = next(r for r in rows if r["upid.pod_name"] == "prod/api-0001")
+        assert isinstance(hit["upid.fn_pod_name_to_start_time"], int)
+        orphan = next(r for r in rows if r["upid.upid"] == (9 << 32 | 9999, 0))
+        assert orphan["upid.ctx_pod"] == "" and orphan["upid.ctx_service"] == ""
+        containers_found = {r["upid.ctx_container_id"] for r in rows} - {""}
+        assert bool(containers_found) == (dims[2] is containers)
+
+
+def test_dim_snapshot_runs_once_per_resolver(spark, fixtures):
+    """The small dims are collected while the first script is planned;
+    planning the same script again launches no job at all, and the
+    second run's collect launches fewer jobs than the first run's."""
+    pods, services, events = fixtures
+    px.set_context(
+        spark, tables={"http_events": events}, metadata=MetadataResolver(pods, services)
+    )
+    code = """
+import px
+df = px.DataFrame('http_events')
+df.responder = df.ctx['service']
+df.requestor = px.pod_id_to_service_name(px.ip_to_pod_id(df.remote_addr))
+px.display(df.groupby(['requestor', 'responder']).agg(n=('latency', px.count)), 'g')
+"""
+    sc = spark.sparkContext
+    jobs = []
+    for run in range(2):
+        for phase in ("plan", "collect"):
+            group = f"md-snapshot-{run}-{phase}"
+            sc.setJobGroup(group, group)
+            try:
+                if phase == "plan":
+                    out = px.run_script(code)["g"]
+                else:
+                    rows = out.collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    plan_1, collect_1, plan_2, collect_2 = jobs
+    assert plan_1 > 0 and plan_2 == 0
+    assert sum(r["n"] for r in rows) > 0
+    assert collect_2 <= collect_1

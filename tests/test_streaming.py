@@ -225,6 +225,34 @@ def test_stream_static_metadata_join(spark, events_dir, tmp_path):
         q.stop()
 
 
+def test_refresh_error_is_logged_when_caught(spark, tmp_path, caplog):
+    """A streaming refresh that fails is logged, with its batch_id, at
+    the moment it is caught — before await_drained raises the errors it
+    collected."""
+    import logging
+
+    import pixie_spark.api as px
+    from pixie_spark.streaming.script_stream import StreamingScriptRun
+
+    caplog.set_level(logging.ERROR, logger="pixie_spark.streaming.script_stream")
+    df = spark.createDataFrame([(i * 1_000_000, i) for i in range(8)], "time_ long, v long")
+    px.set_context(spark)
+    script = "import px\ndf = px.DataFrame('t')\ndf.w = df.no_such_column + 1\npx.display(df, 'out')\n"
+    run = StreamingScriptRun(
+        spark, script, stream_tables={"t": df}, static_tables={},
+        work_dir=str(tmp_path / "refresh_error"), chunks=2,
+    )
+    try:
+        assert _wait_for(lambda: run.refresh_errors)
+        logged = [r for r in caplog.records if "streaming refresh failed" in r.getMessage()]
+        assert logged and logged[0].exc_info is not None
+        assert logged[0].getMessage().endswith("batch_id=0")
+        with pytest.raises(RuntimeError, match="refresh errors"):
+            run.await_drained()
+    finally:
+        run.stop()
+
+
 def test_display_passthrough_stream_appends(spark, events_dir, tmp_path):
     """px.display of a NON-aggregated stream must fall back to append
     mode (complete is invalid without a streaming aggregation)."""
