@@ -339,22 +339,39 @@ def jaccard_pairs(
     )
 
 
-def _minhash_mix(i: int) -> Column:
-    """i-th minwise function from two base hashes: h1 ^ rot(h2, i) —
-    Kirsch-Mitzenmacher-style double hashing, XOR-rotate instead of +i·
-    to stay overflow-free under ANSI."""
+def _minhash_mix_sql(i: int) -> str:
+    """SQL text of the i-th minwise function from two base hashes:
+    h1 ^ rot(h2, i) — Kirsch-Mitzenmacher-style double hashing,
+    XOR-rotate instead of +i· to stay overflow-free under ANSI.
+
+    The wide signature and band expressions are built as SQL text and
+    parsed once in the JVM: composing them from ``F.*`` calls costs 1–3
+    py4j round trips per call, about 5.3k per MinHash/LSH pass at 64
+    hashes, for the same Catalyst expressions. Only ``int()``-coerced
+    integers and fixed internal column names go into the text."""
+    i = int(i)
     if i == 0:
-        return F.col("h1").bitwiseXOR(F.col("h2"))
-    rot = F.shiftleft("h2", i).bitwiseOR(F.shiftrightunsigned("h2", 64 - i))
-    return F.col("h1").bitwiseXOR(rot)
+        return "h1 ^ h2"
+    return f"h1 ^ (shiftleft(h2, {i}) | shiftrightunsigned(h2, {64 - i}))"
+
+
+def _minhash_mix(i: int) -> Column:
+    """i-th minwise function as a Column (see :func:`_minhash_mix_sql`)."""
+    return F.expr(_minhash_mix_sql(i))
+
+
+def _signature_agg(min_args: list[str]) -> Column:
+    """array(min(a_0), ..., min(a_n-1)) AS signature, one parsed
+    aggregate: the same partial/final aggregates as n separate mins."""
+    mins = ", ".join(f"min({a})" for a in min_args)
+    return F.expr(f"array({mins})").alias("signature")
 
 
 def _sig_from_hashed(hashed: DataFrame, num_hashes: int) -> DataFrame:
     """(doc, signature: array<long>) from (doc, h1, h2) shingle rows."""
-    sig = hashed.groupBy("doc").agg(
-        *[F.min(_minhash_mix(i)).alias(f"h{i}") for i in range(num_hashes)]
+    return hashed.groupBy("doc").agg(
+        _signature_agg([_minhash_mix_sql(i) for i in range(int(num_hashes))])
     )
-    return sig.select("doc", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("signature"))
 
 
 def _sig_independent(sid_rows: DataFrame, num_hashes: int) -> DataFrame:
@@ -367,18 +384,19 @@ def _sig_independent(sid_rows: DataFrame, num_hashes: int) -> DataFrame:
     equals the exact result) the (1-t)^num_hashes miss bound only holds
     under genuine independence. Production banding keeps the cheap mixes.
     """
-    sig = sid_rows.groupBy("doc").agg(
-        *[F.min(F.xxhash64("sid", F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
+    return sid_rows.groupBy("doc").agg(
+        _signature_agg([f"xxhash64(sid, {i})" for i in range(int(num_hashes))])
     )
-    return sig.select("doc", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("signature"))
 
 
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 64
 ) -> DataFrame:
     """MinHash signature per doc: sig[i] = min over shingles of
-    xxhash64(i, shingle). One explode + one groupBy; signature is
-    num_hashes longs (num_hashes*8 bytes/doc)."""
+    h1 ^ rotl(h2, i), with h1 = the shingle's xxhash64 id and h2 =
+    xxhash64(h1) — Kirsch-Mitzenmacher mixes (:func:`_minhash_mix_sql`),
+    not num_hashes separate hashes. One explode + one groupBy; signature
+    is num_hashes longs (num_hashes*8 bytes/doc)."""
     # Two longs per shingle row, materialized BEFORE the agg; the
     # num_hashes minwise functions are derived bitwise (_minhash_mix).
     # Hashing the shingle num_hashes times was the measured hot spot (64
@@ -398,26 +416,16 @@ def minhash_signatures(
 def _band_entries(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     """(doc, band, bucket) LSH index rows: bucket = hash of the band's
     signature slice. Docs can only become candidates inside a (band,
-    bucket) posting list — the cross-product never materializes."""
-    return sig.select(
-        "doc",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.element_at("signature", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+    bucket) posting list — the cross-product never materializes. One
+    parsed ``inline`` expression (see :func:`_minhash_mix_sql`)."""
+    r = int(rows_per_band)
+
+    def entry(b: int) -> str:
+        cells = ", ".join(f"element_at(signature, {b * r + k + 1})" for k in range(r))
+        return f"named_struct('band', {b}, 'bucket', xxhash64({cells}))"
+
+    entries = ", ".join(entry(b) for b in range(int(bands)))
+    return sig.selectExpr("doc", f"inline(array({entries}))")
 
 
 def _collapse_groups_by_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

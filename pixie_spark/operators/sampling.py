@@ -365,13 +365,17 @@ def leakage_safe_split(
     seeded-xxhash64-uniform threshold chain over cumulative fractions —
     deterministic, reproducible, and independent of row order.
 
-    Scale shape: components come from the alternating-star closure
-    (operators/clustering.py — two 8-byte shuffles per round, no
-    adjacency lists); the membership join is an equijoin on the 8-byte
+    Scale shape: components come from connected_components
+    (operators/clustering.py): a pair graph of at most
+    ``LOCAL_MAX_EDGES`` edges is union-found on the driver, a larger
+    one runs the alternating-star closure (8-byte keys, no adjacency
+    lists); the membership join is an equijoin on the 8-byte
     ``id_col``; the split decision itself is an in-row expression.
-    Pass ``stats`` to observe the closure's round count (the scale-up
-    invariant: rounds stay flat in data size — Kiveris et al.; the sf1
-    adjudication in SCALE.md reads it through this hook).
+    Pass ``stats`` to receive the closure's ``edges`` and ``rounds``.
+    ``rounds`` is 0 when the graph was resolved on the driver; above
+    the cap it is the scale-up invariant (rounds stay flat in data size
+    — Kiveris et al.; the sf1 adjudication in SCALE.md reads it through
+    this hook).
     """
     from .clustering import connected_components
 

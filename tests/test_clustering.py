@@ -45,11 +45,27 @@ GRAPHS = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_connected_components_vs_union_find(spark, name):
+# Both ways connected_components resolves a graph: at the default cap
+# every graph here is resolved on the driver; a cap of -1 sends every
+# non-empty graph through the alternating-star loop.
+STAR_LOOP = -1
+
+
+def _cc(spark, edges, **kw):
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    return {r["node"]: r["component"] for r in C.connected_components(df, **kw).collect()}
+
+
+@pytest.mark.parametrize(
+    "name,cap",
+    [pytest.param(n, None, id=n) for n in sorted(GRAPHS)]
+    + [pytest.param(n, STAR_LOOP, id=f"{n}-star_loop") for n in sorted(GRAPHS)],
+)
+def test_connected_components_vs_union_find(spark, monkeypatch, name, cap):
+    if cap is not None:
+        monkeypatch.setattr(C, "LOCAL_MAX_EDGES", cap)
     edges = GRAPHS[name]
-    df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    got = {r["node"]: r["component"] for r in C.connected_components(df).collect()}
+    got = _cc(spark, edges)
     exp = uf_components([(a, b) for a, b in edges if a != b])
     # pure self-loop nodes (7,7) carry no dedup information; the Spark
     # side drops them up front, the reference never unions them
@@ -57,7 +73,7 @@ def test_connected_components_vs_union_find(spark, name):
     assert got == exp, (name, got, exp)
 
 
-def test_connected_components_random_graphs(spark):
+def _check_random_graphs(spark):
     rng = random.Random(42)
     for trial in range(3):
         n = 200
@@ -65,30 +81,49 @@ def test_connected_components_random_graphs(spark):
             (rng.randrange(n), rng.randrange(n)) for _ in range(150 + 50 * trial)
         ]
         edges = [(a, b) for a, b in edges if a != b]
-        df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-        got = {r["node"]: r["component"] for r in C.connected_components(df).collect()}
-        assert got == uf_components(edges), f"trial {trial}"
+        assert _cc(spark, edges) == uf_components(edges), f"trial {trial}"
+
+
+def test_connected_components_random_graphs(spark):
+    _check_random_graphs(spark)
+
+
+def test_connected_components_random_graphs_star_loop(spark, monkeypatch):
+    monkeypatch.setattr(C, "LOCAL_MAX_EDGES", STAR_LOOP)
+    _check_random_graphs(spark)
+
+
+def _check_empty(spark):
+    stats: dict = {}
+    assert _cc(spark, [], stats=stats) == {}
+    assert stats == {"edges": 0, "rounds": 0}
 
 
 def test_connected_components_empty(spark):
-    df = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert C.connected_components(df).collect() == []
+    _check_empty(spark)
 
 
-def test_cc_one_driver_action_per_round(spark, monkeypatch):
-    """r12 action shape (default localCheckpoint strategy): each CC
-    round issues exactly ONE driver action — the eager localCheckpoint
-    whose observe metrics carry the convergence checksum. No collect()
-    anywhere in the loop (the former shape re-scanned the cached blocks
-    with a separate checksum aggregate)."""
+def test_connected_components_empty_star_loop(spark, monkeypatch):
+    monkeypatch.setattr(C, "LOCAL_MAX_EDGES", STAR_LOOP)
+    _check_empty(spark)
+
+
+def _count_cuts_and_reads(monkeypatch) -> dict:
+    """Count eager/lazy localCheckpoint cuts and collect()/toPandas()
+    reads made through the DataFrame API from here on."""
     from pyspark.sql.classic.dataframe import DataFrame
 
-    calls = {"collect": 0, "ckpt_eager": 0, "ckpt_lazy": 0}
-    orig_collect, orig_ckpt = DataFrame.collect, DataFrame.localCheckpoint
+    calls = {"collect": 0, "toPandas": 0, "ckpt_eager": 0, "ckpt_lazy": 0}
+    orig_collect, orig_pandas = DataFrame.collect, DataFrame.toPandas
+    orig_ckpt = DataFrame.localCheckpoint
 
     def counting_collect(self):
         calls["collect"] += 1
         return orig_collect(self)
+
+    def counting_pandas(self):
+        calls["toPandas"] += 1
+        return orig_pandas(self)
 
     def counting_ckpt(self, *a, **k):
         eager = a[0] if a else k.get("eager", True)
@@ -96,19 +131,72 @@ def test_cc_one_driver_action_per_round(spark, monkeypatch):
         return orig_ckpt(self, *a, **k)
 
     monkeypatch.setattr(DataFrame, "collect", counting_collect)
+    monkeypatch.setattr(DataFrame, "toPandas", counting_pandas)
     monkeypatch.setattr(DataFrame, "localCheckpoint", counting_ckpt)
+    return calls
+
+
+def test_cc_one_driver_action_per_round(spark, monkeypatch):
+    """r12 action shape of the star loop (default localCheckpoint
+    strategy): each CC round issues exactly ONE driver action — the
+    eager localCheckpoint whose observe metrics carry the convergence
+    checksum. No collect() anywhere in the loop (the former shape
+    re-scanned the cached blocks with a separate checksum aggregate).
+    The cap is -1 so the 120-edge chain takes the loop."""
+    monkeypatch.setattr(C, "LOCAL_MAX_EDGES", STAR_LOOP)
+    calls = _count_cuts_and_reads(monkeypatch)
 
     stats: dict = {}
     df = spark.createDataFrame(GRAPHS["chain"], "doc_a long, doc_b long")
     C.connected_components(df, stats=stats).collect()
     rounds = stats["rounds"]
     assert rounds >= 2
+    assert stats["edges"] == len(GRAPHS["chain"])
     # one eager cut per round + the initial edge cut; every checksum
     # rides an observe accumulator, so the only collect() is the
     # caller's own result read above
     assert calls["ckpt_eager"] == rounds + 1
     assert calls["ckpt_lazy"] == 0
     assert calls["collect"] == 1
+    assert calls["toPandas"] == 0
+
+
+def test_cc_driver_path_shape(spark, monkeypatch):
+    """Below the cap: one eager cut, one read of the cut, no star round,
+    and the result is a local frame — collecting it launches no job."""
+    calls = _count_cuts_and_reads(monkeypatch)
+    stats: dict = {}
+    df = spark.createDataFrame(GRAPHS["chain"], "doc_a long, doc_b long")
+    out = C.connected_components(df, stats=stats)
+    assert stats == {"edges": len(GRAPHS["chain"]), "rounds": 0}
+    assert calls == {"collect": 0, "toPandas": 1, "ckpt_eager": 1, "ckpt_lazy": 0}
+    assert out.schema.simpleString() == "struct<node:bigint,component:bigint>"
+
+    sc = spark.sparkContext
+    group = "cc-driver-path-collect"
+    sc.setJobGroup(group, group)
+    try:
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert {r["node"]: r["component"] for r in rows} == uf_components(GRAPHS["chain"])
+
+
+@pytest.mark.parametrize("n_edges,rounds", [(3, 0), (4, None)])
+def test_cc_cap_boundary(spark, monkeypatch, n_edges, rounds):
+    """A graph of exactly LOCAL_MAX_EDGES edges is resolved on the
+    driver; one more edge takes the star loop; both agree with the
+    union-find reference."""
+    monkeypatch.setattr(C, "LOCAL_MAX_EDGES", 3)
+    edges = [(9, 3), (3, 1), (100, 50), (50, 1)][:n_edges]
+    stats: dict = {}
+    assert _cc(spark, edges, stats=stats) == uf_components(edges)
+    assert stats["edges"] == n_edges
+    if rounds is None:
+        assert stats["rounds"] >= 1
+    else:
+        assert stats["rounds"] == rounds
 
 
 def test_duplicate_clusters_rollup(spark):

@@ -227,6 +227,67 @@ def test_spark_hash_chain_replicas_pinned_against_jvm(spark):
         assert list(r["m"]) == minhash_mix64(r["h1"], r["h2"]), (r["h1"], r["h2"])
 
 
+def test_sql_built_signatures_and_bands_pinned_against_replicas(spark):
+    """The MinHash signatures and LSH band rows are built as parsed SQL
+    text (operators/dedup.py). Pin them bit-exactly against the Python
+    replicas: the KM signature is the per-doc elementwise min of
+    minhash_mix64(sid, xxhash64(sid)), the independent one the min of
+    xxhash64(sid, i), and each band bucket the longs fold of its
+    signature slice."""
+    import random
+
+    from pixie_spark.operators.dedup import _band_entries, _sig_from_hashed, _sig_independent
+    from tools.spark_hash import minhash_mix64, xxhash64_longs
+
+    rng = random.Random(2024)
+    lo, hi = -(2**63), 2**63 - 1
+    docs = {d: [rng.randint(lo, hi) for _ in range(rng.randint(1, 12))] for d in range(40)}
+    docs[0] += [lo, hi, 0, -1]
+    docs[1] = [lo]
+    docs[2] = [hi, hi]
+    sid_rows = spark.createDataFrame(
+        [(d, s) for d, sids in docs.items() for s in sids], "doc long, sid long"
+    )
+    hashed = sid_rows.select("doc", F.col("sid").alias("h1"), F.xxhash64("sid").alias("h2"))
+    num_hashes = 64
+
+    def elementwise_min(vectors):
+        return [min(col) for col in zip(*vectors)]
+
+    want = {
+        "km": {
+            d: elementwise_min(
+                [minhash_mix64(s, xxhash64_long(s), num_hashes) for s in sids]
+            )
+            for d, sids in docs.items()
+        },
+        "independent": {
+            d: elementwise_min(
+                [[xxhash64_long_int(s, i) for i in range(num_hashes)] for s in sids]
+            )
+            for d, sids in docs.items()
+        },
+    }
+    sigs = {
+        "km": _sig_from_hashed(hashed, num_hashes),
+        "independent": _sig_independent(sid_rows, num_hashes),
+    }
+    for name, sig in sigs.items():
+        got = {r["doc"]: list(r["signature"]) for r in sig.collect()}
+        assert got == want[name], name
+        for bands in (16, 64):
+            r = num_hashes // bands
+            buckets = {
+                (e["doc"], e["band"]): e["bucket"]
+                for e in _band_entries(sig, bands, r).collect()
+            }
+            assert buckets == {
+                (d, b): xxhash64_longs(v[b * r:(b + 1) * r])
+                for d, v in want[name].items()
+                for b in range(bands)
+            }, (name, bands)
+
+
 def test_rows_only_tail_is_documented_irreducible():
     """Every registry query is value-verified by the driver gate, a
     local DuckDB oracle, or is on THIS list — the documented tail whose

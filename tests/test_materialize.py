@@ -11,9 +11,10 @@ config ``spark.pixie_spark.materialize``:
 Results must be BIT-IDENTICAL across strategies: the cut changes where
 bytes live, never what they are. The matrix runs one dedup query (the
 minhash-LSH path: signatures are materialized and feed both the band
-explosion and the verify join) and one connected-components query (the
-alternating-star loop: a materialize per round, truncation-required)
-under each strategy.
+explosion and the verify join) and one connected-components query
+under each strategy, both as a driver-resolved small graph and, with
+the cap forced to -1, through the alternating-star loop (a materialize
+per round, truncation-required).
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from pixie_spark.materialize import (
     _STRATEGIES,
     materialize,
 )
+from pixie_spark.operators import clustering
 from pixie_spark.queries import QUERIES
 
 
@@ -39,8 +41,18 @@ def _run_under(spark, strategy, name):
         spark.conf.set(CONF_STRATEGY, old)
 
 
-@pytest.mark.parametrize("name", ["dedup_minhash_lsh", "dedup_clusters"])
-def test_strategies_bit_identical(spark, name):
+@pytest.mark.parametrize(
+    "name,cap",
+    [
+        pytest.param("dedup_minhash_lsh", None, id="dedup_minhash_lsh"),
+        pytest.param("dedup_clusters", None, id="dedup_clusters"),
+        # cap -1: the pair graph takes the star loop under every strategy
+        pytest.param("dedup_clusters", -1, id="dedup_clusters-star_loop"),
+    ],
+)
+def test_strategies_bit_identical(spark, monkeypatch, name, cap):
+    if cap is not None:
+        monkeypatch.setattr(clustering, "LOCAL_MAX_EDGES", cap)
     base = _run_under(spark, "localCheckpoint", name)
     assert base  # a vacuous parity proof would prove nothing
     for strategy in ("persist", "checkpoint"):

@@ -5,7 +5,9 @@ cause named. This probe makes the candidate causes observable:
 
 - CC-round growth: the alternating-star closure's round count must stay
   FLAT in data size (Kiveris et al. §5; operators/clustering.py) — read
-  through leakage_safe_split's ``stats`` hook.
+  through leakage_safe_split's ``stats`` hook. A pair graph of at most
+  ``LOCAL_MAX_EDGES`` edges is resolved on the driver and reports 0
+  rounds; ``cc_edges`` says which side of the cap a tier fell on.
 - Workload growth: the sf1 twin recipe multiplies true near-dup pairs
   ~45× (every pair becomes a 10×10 block), so the closure's EDGE input
   grows super-linearly even though docs grow 10× — rows-per-second, not
@@ -15,7 +17,7 @@ cause named. This probe makes the candidate causes observable:
 
 Usage: python tools/adjudicate_leakage_split.py [sf_dir ...]
        (default: /root/testdata/sf0.1 and .benchdata/sf1 if present)
-Prints one JSON line per tier: {sf_dir, n_docs, n_pairs, cc_rounds,
+Prints one JSON line per tier: {sf_dir, n_docs, n_pairs, cc_edges, cc_rounds,
 n_components, wall_pairs_s, wall_split_s, rows_out}.
 """
 
@@ -52,6 +54,7 @@ def probe(spark, sf_dir: str) -> dict:
         "sf_dir": sf_dir,
         "n_docs": doc.count(),
         "n_pairs": n_pairs,
+        "cc_edges": stats.get("edges"),
         "cc_rounds": stats.get("rounds"),
         "n_components": n_comp,
         "wall_pairs_s": wall_pairs,
