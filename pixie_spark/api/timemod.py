@@ -40,14 +40,6 @@ def set_now(ns: int | None) -> None:
     _now_override = ns
 
 
-def nanos(n: float) -> int:
-    return int(n)
-
-
-def micros(n: float) -> int:
-    return int(n * US)
-
-
 def millis(n: float) -> int:
     return int(n * MS)
 

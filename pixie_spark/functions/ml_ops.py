@@ -26,7 +26,6 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pixie_spark.operators.similarity import dot_product
 from pixie_spark.materialize import materialize
 
 
@@ -34,18 +33,6 @@ def _sq_dist(vec: Column, center: list[float]) -> Column:
     lit = F.array(*[F.lit(float(v)) for v in center])
     diff = F.zip_with(vec, lit, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b))
     return F.aggregate(diff, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _sq_dist_flat(df: DataFrame, center: list[float], dim: int) -> Column:
-    """||x-c||² over pre-flattened d0..d{dim-1} columns — plain arithmetic,
-    codegen-friendly (no lambda trees)."""
-    terms = [
-        (df[f"d{i}"] - float(center[i])) * (df[f"d{i}"] - float(center[i])) for i in range(dim)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
 
 
 def kmeans_assign(vec_col: Column, centroids: list[list[float]]) -> Column:

@@ -12,6 +12,13 @@
                      so the shuffle is on (band, bucket-hash) keys.
 - simhash:           64-bit SimHash signature per doc (hamming-near dup).
 
+The near-dup pair family (jaccard_pairs, minhash_lsh_pairs,
+minhash_lsh_verified_pairs, and similarity.embedding_dedup_pairs'
+prefilter path) always collapses byte-identical contents first
+(_collapse_exact), runs its private uncollapsed core on the distinct
+contents, and expands member pairs from the result; candidates are
+scored by one fetch-and-score join (_score_pairs).
+
 All stages are native Spark column expressions (xxhash64, explode,
 groupBy) — no Python in the hot path.
 """
@@ -46,8 +53,8 @@ def shingles_from_words(ws: Column, n: int = 3) -> Column:
     ``ws`` must be a plain column reference, not a nested expression:
     Spark does no common-subexpression elimination inside higher-order-
     function lambdas, so an inline ``split(text)`` would be re-evaluated
-    for every ``element_at`` call — measured ~30× slowdown. Use
-    ``_words_table`` to materialize the array behind an exchange first.
+    for every ``element_at`` call — measured ~30× slowdown. The
+    operators avoid arrays altogether: see :func:`_hashed_shingle_rows`.
     """
     k = F.size(ws) - (n - 1)
     grams = F.transform(
@@ -59,7 +66,8 @@ def shingles_from_words(ws: Column, n: int = 3) -> Column:
 
 def shingles(text: Column, n: int = 3) -> Column:
     """Shingles directly from a text column — convenience for small inputs;
-    prefer the _words_table path in operators (see shingles_from_words)."""
+    the operators use :func:`_hashed_shingle_rows` (see
+    shingles_from_words)."""
     return shingles_from_words(F.filter(F.split(text, r"\s+"), lambda w: w != ""), n)
 
 
@@ -109,40 +117,6 @@ def _word_rows(
     )
 
 
-def _shingle_index(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(doc, shingle) inverted index, one row per DISTINCT shingle per doc.
-
-    Window-lead construction: shingle_i = word_i .. word_{i+n-1} via
-    ``lead`` over (doc, pos). Unlike an array-transform formulation this
-    stays inside whole-stage codegen and parallelizes across the cluster
-    after the per-doc shuffle regardless of source file splittability —
-    HOF lambdas are interpreted and were the hot spot at scale.
-    """
-    return _shingle_arrays_direct(df, id_col, text_col, n).select(
-        "doc", F.explode("sh").alias("shingle")
-    )
-
-
-def _shingle_arrays_direct(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(doc, sh: array<string> DISTINCT shingles) in ONE shuffle.
-
-    The window shuffle partitions by doc; the groupBy(doc) that follows
-    reuses that partitioning (no exchange), and array_distinct replaces a
-    separate (doc, shingle) distinct — saving two shuffles vs the naive
-    shingle-rows → distinct → collect_list chain.
-    """
-    win = Window.partitionBy("doc").orderBy("pos")
-    w = _word_rows(df, id_col, text_col)
-    parts = [F.col("word")] + [F.lead("word", j).over(win) for j in range(1, n)]
-    rows = (
-        w.withColumn("last_w", F.lead("word", n - 1).over(win))
-        .withColumn("shingle", F.concat_ws(" ", *parts))
-        .where(F.col("last_w").isNotNull())
-        .select("doc", "shingle")
-    )
-    return rows.groupBy("doc").agg(F.array_distinct(F.collect_list("shingle")).alias("sh"))
-
-
 def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(doc, sid: long) — one row per shingle POSITION, shingle identified
     by xxhash64 over its n words directly (no string concat is ever
@@ -150,6 +124,12 @@ def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> D
     ambiguity can't alias two different n-grams). Everything past this
     point moves 8-byte longs instead of ~n·word-length strings — the
     dominant shuffle-volume win for the dedup family at corpus scale.
+
+    Window-lead construction (word_i .. word_{i+n-1} via ``lead`` over
+    (doc, pos)): unlike an array-transform formulation it stays inside
+    whole-stage codegen and parallelizes after the per-doc shuffle;
+    higher-order-function lambdas are interpreted and were the hot spot
+    at scale.
     """
     win = Window.partitionBy("doc").orderBy("pos")
     w = _word_rows(df, id_col, text_col)
@@ -164,8 +144,10 @@ def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> D
 
 
 def _hashed_shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(doc, sh: array<long> DISTINCT shingle ids) in ONE shuffle — the
-    8-byte twin of _shingle_arrays_direct (same window→groupBy plan)."""
+    """(doc, sh: array<long> DISTINCT shingle ids) in ONE shuffle: the
+    window shuffle partitions by doc and the groupBy(doc) that follows
+    reuses that partitioning; array_distinct replaces a separate
+    (doc, sid) distinct."""
     return (
         _hashed_shingle_rows(df, id_col, text_col, n)
         .groupBy("doc")
@@ -229,6 +211,125 @@ def posting_list_skew_stats(
     )
 
 
+def _band_candidates(entries: DataFrame, max_list_size: int | None) -> DataFrame:
+    """(doc_a, doc_b) pairs sharing a (band, bucket) of the (doc, band,
+    bucket) LSH rows, from one posting list per bucket (no self-join;
+    see :func:`_pairs_from_posting_lists`)."""
+    return _pairs_from_posting_lists(
+        entries.groupBy("band", "bucket").agg(F.collect_list("doc").alias("docs")),
+        max_list_size=max_list_size,
+    )
+
+
+def _jaccard(a: Column, b: Column) -> Column:
+    """Exact Jaccard of two distinct-shingle-id arrays."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter / (F.size(a) + F.size(b) - inter)
+
+
+def _est_jaccard(num_hashes: int):
+    """Estimated Jaccard of two MinHash signatures: the fraction of
+    agreeing positions."""
+    return lambda a, b: F.size(
+        F.filter(F.zip_with(a, b, lambda x, y: x == y), lambda m: m)
+    ) / F.lit(float(num_hashes))
+
+
+def _score_pairs(
+    cands: DataFrame, left: DataFrame, right: DataFrame, col: str,
+    score_col: str, score, threshold: float,
+) -> DataFrame:
+    """(doc_a, doc_b, score_col) for candidate (doc_a, doc_b) pairs: fetch
+    ``col`` for doc_a from ``left`` and for doc_b from ``right`` (both
+    (doc, col) frames), score with ``score(a, b)``, keep >= threshold."""
+    sa = left.select(F.col("doc").alias("doc_a"), F.col(col).alias(f"{col}_a"))
+    sb = right.select(F.col("doc").alias("doc_b"), F.col(col).alias(f"{col}_b"))
+    return (
+        cands.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .withColumn(score_col, score(F.col(f"{col}_a"), F.col(f"{col}_b")))
+        .where(F.col(score_col) >= threshold)
+        .select("doc_a", "doc_b", score_col)
+    )
+
+
+def _collapse_exact(
+    df: DataFrame, id_col: str, content_col: str, core, score_col: str,
+    intra_score: Column, threshold: float, max_group: int | None,
+    pair: tuple[str, str] = ("doc_a", "doc_b"), intra_if: Column | None = None,
+) -> DataFrame:
+    """Exact-dedup-first pairs, shared by the text and embedding pair
+    operators: byte-identical contents collapse to one representative
+    (the minimum id), ``core(reps)`` pairs the (id_col, content_col)
+    representatives into (a, b, score_col) rows (``pair`` = the id
+    columns, a < b), and member pairs expand from them. Shingles,
+    signatures, buckets and scores are pure functions of the content
+    bytes, so the output equals ``core`` run on the members, score bits
+    included, while candidate generation pays Σk² over DISTINCT contents.
+
+    rep/gsize are WINDOW aggregates over the content partition: no
+    per-group array, so an exact-dup cluster of 100M copies is narrow
+    spillable rows, not one ~GB collect_list row. Materialized: the
+    reps, the membership and the intra expansion all read it.
+
+    - cross: each rep pair expands to every member combination,
+      orientation-normalized; the score carries over bit-exactly.
+    - intra: twins pair at ``intra_score`` (a Column over content_col,
+      once per group), kept >= threshold, for groups passing
+      ``intra_if``: text under n words has no shingles, so the core
+      never pairs its twins, and a literal text score folds into the
+      plan. ``max_group`` carries the core's bucket cap here: k twins
+      are a k² emission like a hot posting list, so larger clusters are
+      dropped as stop-keys (exact_dedup handles them at O(k)). The cap
+      thus counts DISTINCT contents per bucket.
+    """
+    w = Window.partitionBy(content_col)
+    g = (
+        df.select(F.col(id_col).alias("id"), content_col)
+        .withColumn("rep", F.min("id").over(w))
+        .withColumn("gsize", F.count(F.lit(1)).over(w))
+        .transform(materialize)
+    )
+    rep_pairs = core(
+        g.where(F.col("id") == F.col("rep")).select(F.col("rep").alias(id_col), content_col)
+    )
+    a, b = pair
+    mem = g.select("rep", "id")
+    cross = (
+        rep_pairs
+        .join(mem.select(F.col("rep").alias(a), F.col("id").alias("__ma")), a)
+        .join(mem.select(F.col("rep").alias(b), F.col("id").alias("__mb")), b)
+        .select(
+            F.least("__ma", "__mb").alias(a),
+            F.greatest("__ma", "__mb").alias(b),
+            score_col,
+        )
+    )
+    cond = (F.col("id") == F.col("rep")) & (F.col("gsize") > 1)
+    if intra_if is not None:
+        cond = cond & intra_if
+    if max_group is not None:
+        cond = cond & (F.col("gsize") <= max_group)
+    eligible = (
+        g.where(cond)
+        .select("rep", intra_score.alias(score_col))
+        .where(F.col(score_col) >= threshold)
+    )
+    emem = eligible.join(mem, "rep")
+    intra = (
+        emem.select("rep", F.col("id").alias(a), score_col)
+        .join(emem.select("rep", F.col("id").alias(b)), "rep")
+        .where(F.col(a) < F.col(b))
+        .select(a, b, score_col)
+    )
+    return cross.unionByName(intra)
+
+
+def _has_shingle(text: Column, n: int) -> Column:
+    """The text has at least n words, i.e. at least one n-word shingle."""
+    return F.size(F.filter(F.split(text, r"\s+"), lambda x: x != "")) >= n
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -236,7 +337,6 @@ def jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_posting_list: int | None = MAX_POSTING_LIST,
-    collapse_exact: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard ≥ threshold pairs via prefix filtering.
 
@@ -267,23 +367,24 @@ def jaccard_pairs(
     merge_nodes_rule.h:36-44); without it the self-join recomputes the
     whole shingle subtree once per side (measured 10× slowdown).
 
-    ``collapse_exact``: exact-dedup-first (see minhash_lsh_pairs).
-    PPJoin is lossless under ANY global shingle order, so re-deriving
+    Byte-identical texts collapse first (:func:`_collapse_exact`).
+    PPJoin is lossless under ANY global shingle order, so deriving
     document frequencies over DISTINCT texts instead of members changes
-    candidate composition but never the exact-Jaccard survivor set —
-    the collapsed output is identical (cap caveat as documented there).
+    candidate composition but never the exact-Jaccard survivor set.
     """
-    if collapse_exact:
-        g = _collapse_groups_by_text(df, id_col, text_col)
-        rep_pairs = jaccard_pairs(
-            g.where(F.col("id") == F.col("rep"))
-            .select(F.col("rep").alias(id_col), F.col("text").alias(text_col)),
-            id_col, text_col, n, threshold, max_posting_list,
-            collapse_exact=False,
-        )
-        return _expand_collapsed_pairs(
-            g, rep_pairs, "jaccard", threshold, n, max_posting_list
-        )
+    return _collapse_exact(
+        df, id_col, text_col,
+        lambda reps: _jaccard_pairs(reps, id_col, text_col, n, threshold, max_posting_list),
+        "jaccard", F.lit(1.0), threshold, max_posting_list,
+        intra_if=_has_shingle(F.col(text_col), n),
+    )
+
+
+def _jaccard_pairs(
+    df: DataFrame, id_col: str, text_col: str, n: int, threshold: float,
+    max_posting_list: int | None,
+) -> DataFrame:
+    """:func:`jaccard_pairs` without the exact-dup collapse."""
     sh = _hashed_shingle_arrays(df, id_col, text_col, n).transform(materialize)
     idx = sh.select("doc", F.explode("sh").alias("shingle"))
     dfreq = idx.groupBy("shingle").agg(F.count(F.lit(1)).alias("dfreq"))
@@ -325,18 +426,7 @@ def jaccard_pairs(
         prefix.groupBy("shingle").agg(F.collect_list("doc").alias("docs")),
         max_list_size=max_posting_list,
     )
-    sa = sh.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard", inter / (F.size("sh_a") + F.size("sh_b") - inter)
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _score_pairs(cands, sh, sh, "sh", "jaccard", _jaccard, threshold)
 
 
 def _minhash_mix_sql(i: int) -> str:
@@ -367,8 +457,18 @@ def _signature_agg(min_args: list[str]) -> Column:
     return F.expr(f"array({mins})").alias("signature")
 
 
-def _sig_from_hashed(hashed: DataFrame, num_hashes: int) -> DataFrame:
-    """(doc, signature: array<long>) from (doc, h1, h2) shingle rows."""
+def _sig_km(sid_rows: DataFrame, num_hashes: int) -> DataFrame:
+    """(doc, signature: array<long>) from (doc, sid) rows using
+    Kirsch-Mitzenmacher mixes of h1 = sid and h2 = xxhash64(sid).
+
+    Two longs per shingle row, projected BEFORE the agg; the num_hashes
+    minwise functions are derived bitwise (:func:`_minhash_mix_sql`).
+    Hashing the shingle num_hashes times was the measured hot spot (64
+    string hashes/row ≫ 2 hashes + 64 bitwise mixes); projecting h1/h2
+    matters because Catalyst does no CSE across the 64 aggregate input
+    expressions. h1 IS the hashed shingle id (already a 64-bit
+    avalanche of the n words — no shingle string is ever built)."""
+    hashed = sid_rows.select("doc", F.col("sid").alias("h1"), F.xxhash64("sid").alias("h2"))
     return hashed.groupBy("doc").agg(
         _signature_agg([_minhash_mix_sql(i) for i in range(int(num_hashes))])
     )
@@ -378,7 +478,7 @@ def _sig_independent(sid_rows: DataFrame, num_hashes: int) -> DataFrame:
     """(doc, signature: array<long>) from (doc, sid) rows using num_hashes
     INDEPENDENT minwise functions h_i = xxhash64(sid, i) — per-i seeded
     full hashes, not Kirsch-Mitzenmacher mixes of two base hashes. ~32×
-    more hash work per shingle row than _sig_from_hashed, so this is the
+    more hash work per shingle row than _sig_km, so this is the
     CORRECTNESS-CONTRACT path: the KM mixes are pairwise-correlated, and
     when the stated contract is full recall (bands == num_hashes ⇒ output
     equals the exact result) the (1-t)^num_hashes miss bound only holds
@@ -394,23 +494,10 @@ def minhash_signatures(
 ) -> DataFrame:
     """MinHash signature per doc: sig[i] = min over shingles of
     h1 ^ rotl(h2, i), with h1 = the shingle's xxhash64 id and h2 =
-    xxhash64(h1) — Kirsch-Mitzenmacher mixes (:func:`_minhash_mix_sql`),
-    not num_hashes separate hashes. One explode + one groupBy; signature
+    xxhash64(h1) — Kirsch-Mitzenmacher mixes (:func:`_sig_km`), not
+    num_hashes separate hashes. One explode + one groupBy; signature
     is num_hashes longs (num_hashes*8 bytes/doc)."""
-    # Two longs per shingle row, materialized BEFORE the agg; the
-    # num_hashes minwise functions are derived bitwise (_minhash_mix).
-    # Hashing the shingle num_hashes times was the measured hot spot (64
-    # string hashes/row ≫ 2 hashes + 64 bitwise mixes); materializing
-    # h1/h2 in a projection matters because Catalyst does no CSE across
-    # the 64 aggregate input expressions. h1 IS the hashed shingle id
-    # (already a 64-bit avalanche of the n words — no shingle string is
-    # ever built).
-    hashed = _hashed_shingle_rows(df, id_col, text_col, n).select(
-        "doc",
-        F.col("sid").alias("h1"),
-        F.xxhash64("sid").alias("h2"),
-    )
-    return _sig_from_hashed(hashed, num_hashes)
+    return _sig_km(_hashed_shingle_rows(df, id_col, text_col, n), num_hashes)
 
 
 def _band_entries(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
@@ -428,88 +515,6 @@ def _band_entries(sig: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     return sig.selectExpr("doc", f"inline(array({entries}))")
 
 
-def _collapse_groups_by_text(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, text, rep = min id over byte-identical texts, gsize) — the
-    exact-dedup-first collapse shared by the MinHash/PPJoin pair
-    generators: byte-identical texts have identical shingle sets,
-    signatures, and band buckets, so every pair-level quantity is a
-    pure function of the (rep_a, rep_b) texts and member pairs expand
-    from rep pairs without recomputation.
-
-    rep/gsize come from WINDOW aggregates over the text partition, so
-    NO per-group array is ever materialized: a collect_list
-    formulation would put a pathological exact-dup cluster (100M
-    copies of one boilerplate page) into ONE ~GB aggregation row —
-    here it is just 100M narrow rows on the reducer, spillable like
-    any partition. One shuffle on the text bytes; localCheckpoint'd
-    because the rep projection, the membership frame, and the intra
-    expansion all read it."""
-    w = Window.partitionBy("text")
-    return (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-        .withColumn("rep", F.min("id").over(w))
-        .withColumn("gsize", F.count(F.lit(1)).over(w))
-        .transform(materialize)
-    )
-
-
-def _expand_collapsed_pairs(
-    g: DataFrame,
-    rep_pairs: DataFrame,
-    score_col: str,
-    threshold: float,
-    n: int,
-    max_group: int | None,
-) -> DataFrame:
-    """Member-level (doc_a, doc_b, score) from rep-level pairs plus the
-    intra-group twin pairs.
-
-    - cross: each surviving rep pair expands to every member
-      combination, orientation-normalized; the score carries over
-      bit-exactly (members share the rep's text bytes).
-    - intra: byte-identical docs have Jaccard exactly 1.0 (s/(s+s-s) in
-      the verified variant, num_hashes/num_hashes in the estimated one —
-      both exact doubles), PROVIDED the text has at least one shingle:
-      a doc shorter than n words produces no shingles, no signature and
-      no band entries, so the uncollapsed path never pairs its twins —
-      the word-count gate reproduces that exactly. ``max_group``
-      carries the posting-list cap to the intra expansion: an exact-dup
-      cluster of k members is a k² pair emission exactly like a hot
-      posting list, so clusters past the cap are dropped as stop-keys
-      (the uncollapsed path dropped them through their >cap band
-      buckets; production routes such clusters through dedup_exact,
-      which handles them at O(k)).
-    """
-    mem = g.select("rep", "id")
-    cross = (
-        rep_pairs
-        .join(mem.select(F.col("rep").alias("doc_a"), F.col("id").alias("__ma")), "doc_a")
-        .join(mem.select(F.col("rep").alias("doc_b"), F.col("id").alias("__mb")), "doc_b")
-        .select(
-            F.least("__ma", "__mb").alias("doc_a"),
-            F.greatest("__ma", "__mb").alias("doc_b"),
-            score_col,
-        )
-    )
-    if threshold > 1.0:
-        return cross
-    has_shingle = (
-        F.size(F.filter(F.split("text", r"\s+"), lambda x: x != "")) >= n
-    )
-    cond = (F.col("id") == F.col("rep")) & (F.col("gsize") > 1) & has_shingle
-    if max_group is not None:
-        cond = cond & (F.col("gsize") <= max_group)
-    eligible = g.where(cond).select("rep")
-    emem = eligible.join(mem, "rep")
-    intra = (
-        emem.select("rep", F.col("id").alias("doc_a"))
-        .join(emem.select("rep", F.col("id").alias("doc_b")), "rep")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(1.0).alias(score_col))
-    )
-    return cross.unionByName(intra)
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -519,7 +524,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.5,
     max_posting_list: int | None = MAX_POSTING_LIST,
-    collapse_exact: bool = True,
 ) -> DataFrame:
     """Near-dup candidate pairs via banded MinHash-LSH, verified by
     estimated Jaccard (fraction of agreeing minhashes).
@@ -528,50 +532,30 @@ def minhash_lsh_pairs(
     per (band, bucket) and the full cross-product never materializes.
     Output: (doc_a, doc_b, est_jaccard).
 
-    ``collapse_exact``: byte-identical texts collapse to one
-    representative before signatures/banding (exact-dedup-first — the
-    decisive cut on dup-heavy corpora; see _expand_collapsed_pairs for
-    why results are identical). Note the posting-list cap then counts
-    DISTINCT texts per bucket — the more faithful skew measure; on a
-    corpus where the cap binds, member-level counting could drop pairs
-    the collapsed run keeps.
+    Byte-identical texts collapse to one representative before
+    signatures and banding (:func:`_collapse_exact`): the decisive cut
+    on dup-heavy corpora, with identical output. Twins of a text with at
+    least n words pair at est_jaccard exactly 1.0.
     """
-    if collapse_exact:
-        g = _collapse_groups_by_text(df, id_col, text_col)
-        rep_pairs = minhash_lsh_pairs(
-            g.where(F.col("id") == F.col("rep"))
-            .select(F.col("rep").alias(id_col), F.col("text").alias(text_col)),
-            id_col, text_col, n, num_hashes, bands, threshold,
-            max_posting_list, collapse_exact=False,
-        )
-        return _expand_collapsed_pairs(
-            g, rep_pairs, "est_jaccard", threshold, n, max_posting_list
-        )
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes).transform(materialize)
-    band_entries = _band_entries(sig, bands, rows_per_band)
-
-    # candidate pairs from bucket posting lists (no self-join; see
-    # _pairs_from_posting_lists) — LSH guarantees short lists except for
-    # true near-dup clusters, and the cap bounds those
-    cands = _pairs_from_posting_lists(
-        band_entries.groupBy("band", "bucket").agg(F.collect_list("doc").alias("docs")),
-        max_list_size=max_posting_list,
+    return _collapse_exact(
+        df, id_col, text_col,
+        lambda reps: _minhash_lsh_pairs(
+            reps, id_col, text_col, n, num_hashes, bands, threshold, max_posting_list
+        ),
+        "est_jaccard", F.lit(1.0), threshold, max_posting_list,
+        intra_if=_has_shingle(F.col(text_col), n),
     )
-    sa = sig.select(F.col("doc").alias("doc_a"), F.col("signature").alias("sig_a"))
-    sb = sig.select(F.col("doc").alias("doc_b"), F.col("signature").alias("sig_b"))
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-            lambda m: m,
-        )
-    ) / F.lit(float(num_hashes))
-    return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("est_jaccard", est)
-        .where(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard")
+
+
+def _minhash_lsh_pairs(
+    df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int,
+    bands: int, threshold: float, max_posting_list: int | None,
+) -> DataFrame:
+    """:func:`minhash_lsh_pairs` without the exact-dup collapse."""
+    sig = minhash_signatures(df, id_col, text_col, n, num_hashes).transform(materialize)
+    cands = _band_candidates(_band_entries(sig, bands, num_hashes // bands), max_posting_list)
+    return _score_pairs(
+        cands, sig, sig, "signature", "est_jaccard", _est_jaccard(num_hashes), threshold
     )
 
 
@@ -584,7 +568,6 @@ def minhash_lsh_verified_pairs(
     bands: int = 64,
     threshold: float = 0.5,
     max_posting_list: int | None = MAX_POSTING_LIST,
-    collapse_exact: bool = True,
 ) -> DataFrame:
     """Banded MinHash-LSH candidates verified by EXACT Jaccard — the
     standard production shape (LSH recall stage + exact verify stage):
@@ -612,49 +595,30 @@ def minhash_lsh_verified_pairs(
     gate fixtures contain, and posting_list_skew_stats makes the drop
     observable in production.
 
-    ``collapse_exact``: exact-dedup-first (see minhash_lsh_pairs) — at
+    Byte-identical texts collapse first (:func:`_collapse_exact`): at
     the sf1 twin tier this turns the 100× band-bucket blow-up from
     member-level k² into distinct-level k², with bit-identical output.
     """
-    if collapse_exact:
-        g = _collapse_groups_by_text(df, id_col, text_col)
-        rep_pairs = minhash_lsh_verified_pairs(
-            g.where(F.col("id") == F.col("rep"))
-            .select(F.col("rep").alias(id_col), F.col("text").alias(text_col)),
-            id_col, text_col, n, num_hashes, bands, threshold,
-            max_posting_list, collapse_exact=False,
-        )
-        return _expand_collapsed_pairs(
-            g, rep_pairs, "jaccard", threshold, n, max_posting_list
-        )
-    rows_per_band = num_hashes // bands
+    return _collapse_exact(
+        df, id_col, text_col,
+        lambda reps: _minhash_lsh_verified_pairs(
+            reps, id_col, text_col, n, num_hashes, bands, threshold, max_posting_list
+        ),
+        "jaccard", F.lit(1.0), threshold, max_posting_list,
+        intra_if=_has_shingle(F.col(text_col), n),
+    )
+
+
+def _minhash_lsh_verified_pairs(
+    df: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int,
+    bands: int, threshold: float, max_posting_list: int | None,
+) -> DataFrame:
+    """:func:`minhash_lsh_verified_pairs` without the exact-dup collapse."""
     sh = _hashed_shingle_arrays(df, id_col, text_col, n).transform(materialize)
     sid_rows = sh.select("doc", F.explode("sh").alias("sid"))
-    if bands == num_hashes:
-        sig = _sig_independent(sid_rows, num_hashes)
-    else:
-        hashed = sid_rows.select(
-            "doc",
-            F.col("sid").alias("h1"),
-            F.xxhash64("sid").alias("h2"),
-        )
-        sig = _sig_from_hashed(hashed, num_hashes)
-    cands = _pairs_from_posting_lists(
-        _band_entries(sig, bands, rows_per_band)
-        .groupBy("band", "bucket")
-        .agg(F.collect_list("doc").alias("docs")),
-        max_list_size=max_posting_list,
-    )
-    sa = sh.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", inter / (F.size("sh_a") + F.size("sh_b") - inter))
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    sig = (_sig_independent if bands == num_hashes else _sig_km)(sid_rows, num_hashes)
+    cands = _band_candidates(_band_entries(sig, bands, num_hashes // bands), max_posting_list)
+    return _score_pairs(cands, sh, sh, "sh", "jaccard", _jaccard, threshold)
 
 
 def duplicate_spans(

@@ -36,8 +36,10 @@ from pyspark.sql import functions as F
 from pixie_spark.materialize import materialize
 from pixie_spark.operators.dedup import (
     MAX_POSTING_LIST,
+    _band_candidates,
     _band_entries,
-    _pairs_from_posting_lists,
+    _est_jaccard,
+    _score_pairs,
     minhash_signatures,
 )
 
@@ -86,23 +88,10 @@ def incremental_pairs(
         .distinct()
     )
     # new-vs-new: the ordinary posting-list path over the batch alone
-    cand_nn = _pairs_from_posting_lists(
-        new_entries.groupBy("band", "bucket").agg(F.collect_list("doc").alias("docs")),
-        max_list_size=max_posting_list,
-    )
-    sa = new_sigs.select(F.col("doc").alias("doc_a"), F.col("signature").alias("sig_a"))
-    all_sigs = old_sigs.unionByName(new_sigs)
-    sb = all_sigs.select(F.col("doc").alias("doc_b"), F.col("signature").alias("sig_b"))
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
-    ) / F.lit(float(num_hashes))
-    return (
-        cand_no.unionByName(cand_nn)
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("est_jaccard", est)
-        .where(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard")
+    cand_nn = _band_candidates(new_entries, max_posting_list)
+    return _score_pairs(
+        cand_no.unionByName(cand_nn), new_sigs, old_sigs.unionByName(new_sigs),
+        "signature", "est_jaccard", _est_jaccard(num_hashes), threshold,
     )
 
 

@@ -16,6 +16,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pixie_spark.materialize import materialize
+from pixie_spark.operators.dedup import _collapse_exact
 
 
 def dot_product(a: Column, b: Column) -> Column:
@@ -79,6 +80,11 @@ def brute_force_topk(
     )
 
 
+def _el(col: str, i: int) -> str:
+    """SQL text of element i (0-based) of array column ``col`` as a double."""
+    return f"CAST(element_at({col}, {i + 1}) AS DOUBLE)"
+
+
 def embedding_dedup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -89,7 +95,6 @@ def embedding_dedup_pairs(
     n_tables: int = 8,
     dim: int = 64,
     max_bucket_size: int | None = None,
-    collapse_exact: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a, id_b, score) with
     cosine ≥ threshold and id_a < id_b.
@@ -106,25 +111,31 @@ def embedding_dedup_pairs(
     lsh_topk), so only bucket-colliding pairs are scored; recall follows
     the LSH collision curve at the threshold's implied angle.
 
-    ``collapse_exact`` (prefilter path only): byte-identical vectors are
-    collapsed to one representative BEFORE candidate generation — the
-    standard exact-dedup-first stage of every dedup pipeline, and the
-    decisive cut on real crawl corpora where exact duplicates dominate.
-    Results are IDENTICAL to the uncollapsed run, not approximately so:
-    LSH buckets are a pure function of the vector bytes, so members of
-    a group collide exactly when their representative does (intra-group
-    pairs always — same vector, same buckets), and every score is
-    computed from the representative's bytes through the same fold the
-    member pair would use. Candidate-join cost drops from Σk² over
-    buckets of MEMBERS to Σk² over buckets of DISTINCT vectors, and the
-    (output-proportional) twin pairs are emitted by expansion joins
-    AFTER the threshold filter. Measured at the sf1 twin tier (20k
+    The prefilter path collapses byte-identical vectors to one
+    representative BEFORE candidate generation (dedup._collapse_exact) —
+    the standard exact-dedup-first stage, and the decisive cut on real
+    crawl corpora where exact duplicates dominate. Results are IDENTICAL
+    to the uncollapsed run: LSH buckets are a pure function of the
+    vector bytes, so members of a group collide exactly when their
+    representative does, and every score is computed from the
+    representative's bytes through the same fold the member pair would
+    use; twin pairs score once per group with that fold
+    ((v·v) / (sqrt(Σv²)·sqrt(Σv²))). Measured at the sf1 twin tier (20k
     vectors = 2k distinct × 10): 87.4 s → 2.6 s median (34×), same
-    129,700 pairs; dup-free sf0.1 within run-to-run spread. With
-    ``max_bucket_size`` set, the cap now reads DISTINCT vectors per
-    bucket — a more faithful skew measure than member counts inflated
-    by exact twins.
+    129,700 pairs. ``max_bucket_size`` then reads DISTINCT vectors per
+    bucket, and also caps the exact-dup group size of the twin pairs.
     """
+    if prefilter:
+        dot_self = " + ".join(f"({_el(vec_col, i)} * {_el(vec_col, i)})" for i in range(dim))
+        return _collapse_exact(
+            df, id_col, vec_col,
+            lambda reps: _embedding_lsh_pairs(
+                reps, id_col, vec_col, threshold, n_planes, n_tables, dim, max_bucket_size
+            ),
+            "score",
+            F.expr(f"({dot_self}) / (sqrt({dot_self}) * sqrt({dot_self}))"),
+            threshold, max_bucket_size, pair=("id_a", "id_b"),
+        )
 
     def flat(side: str) -> DataFrame:
         cols = [F.col(id_col).alias(f"id_{side}")]
@@ -148,183 +159,118 @@ def embedding_dedup_pairs(
             dot = dot + F.col(f"a{i}") * F.col(f"b{i}")
         return dot / (F.col("norm_a") * F.col("norm_b"))
 
-    if prefilter and collapse_exact:
-        def el0(col: str, i: int) -> str:
-            return f"CAST(element_at({col}, {i + 1}) AS DOUBLE)"
+    a, b = flat("a"), flat("b")
+    # the cheap id predicate goes FIRST in the join condition: Spark
+    # evaluates conjuncts left-to-right, so putting the 64-term dot
+    # in a later where() would get it ANDed in FRONT and computed for
+    # all n² combos instead of n²/2
+    pairs = a.join(b, (F.col("id_a") < F.col("id_b")) & (score_expr() >= threshold))
+    # score recomputed in the projection for SURVIVING pairs only —
+    # Catalyst has no CSE across join condition and project, and a
+    # post-join filter would be pushed in FRONT of the cheap id check;
+    # survivors are a tiny fraction of the n^2/2 candidates, so the
+    # recompute is the cheaper side of the trade.
+    return pairs.select("id_a", "id_b", score_expr().alias("score"))
 
-        # rep/gsize via WINDOW aggregates over the vector partition — no
-        # per-group array is ever materialized (a collect_list of a
-        # pathological 100M-twin cluster would be one ~GB aggregation
-        # row; as window output it is just narrow rows). One shuffle on
-        # the vector bytes, checkpointed for the three consumers below.
-        gw = Window.partitionBy("vec")
-        g = (
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-            .withColumn("rep", F.min("id").over(gw))
-            .withColumn("gsize", F.count(F.lit(1)).over(gw))
-            .transform(materialize)
-        )
-        reps = g.where(F.col("id") == F.col("rep")).select(
-            F.col("rep").alias(id_col), F.col("vec").alias(vec_col)
-        )
-        rep_pairs = embedding_dedup_pairs(
-            reps, id_col, vec_col, threshold, True,
-            n_planes, n_tables, dim, max_bucket_size, collapse_exact=False,
-        )
-        mem = g.select("rep", "id")
-        # cross-group expansion: a rep pair that survived the threshold
-        # expands to every member combination, orientation-normalized;
-        # the score carries over bit-exactly (members ARE the rep bytes)
-        cross = (
-            rep_pairs
-            .join(mem.select(F.col("rep").alias("id_a"), F.col("id").alias("__ma")), "id_a")
-            .join(mem.select(F.col("rep").alias("id_b"), F.col("id").alias("__mb")), "id_b")
-            .select(
-                F.least("__ma", "__mb").alias("id_a"),
-                F.greatest("__ma", "__mb").alias("id_b"),
-                "score",
-            )
-        )
-        # intra-group pairs: same vector on both sides — score once per
-        # group with the SAME left-assoc fold the pair path uses
-        # ((v·v) / (sqrt(Σv²)·sqrt(Σv²))), so doubles stay bit-identical
-        # to scoring the members through the fetch path / the oracle
-        dot_self = " + ".join(f"({el0('vec', i)} * {el0('vec', i)})" for i in range(dim))
-        self_cond = (F.col("id") == F.col("rep")) & (F.col("gsize") > 1)
-        if max_bucket_size is not None:
-            # the bucket cap's k² bound carries to the intra expansion:
-            # an exact-dup cluster of gsize members is the same
-            # single-key quadratic a hot bucket would be
-            self_cond = self_cond & (F.col("gsize") <= max_bucket_size)
-        self_scored = (
-            g.where(self_cond)
-            .select(
-                "rep",
-                F.expr(
-                    f"({dot_self}) / (sqrt({dot_self}) * sqrt({dot_self}))"
-                ).alias("score"),
-            )
-            .where(F.col("score") >= threshold)
-        )
-        intra = (
-            mem.select("rep", F.col("id").alias("id_a"))
-            .join(mem.select("rep", F.col("id").alias("id_b")), "rep")
-            .where(F.col("id_a") < F.col("id_b"))
-            .join(self_scored, "rep")
-            .select("id_a", "id_b", "score")
-        )
-        return cross.unionByName(intra)
 
-    if prefilter:
-        # Single-pass index build: norm + per-table sparse-LSH buckets in
-        # ONE codegen projection over the corpus, localCheckpoint'd so the
-        # self-join's two sides and the fetch joins read the materialized
-        # index instead of recomputing plane dots. The vectors stay as
-        # ARRAYS here (no 64-col flatten): wide flattened join inputs sent
-        # Catalyst's constraint propagation into a pairwise-canonicalize
-        # blowup (minutes of pure planning), and dragging 64 columns
-        # through the bucket-join shuffle octupled shuffled bytes.
-        # All chains are built as single SQL expr STRINGS, not Column
-        # arithmetic: every Column `+` is a py4j round trip, and ~2000 of
-        # them cost more wall-clock than the query's execution (measured
-        # ~6s of pure plan construction). SQL `+` is left-associative, so
-        # fold order — and thus every double and every bucket sign — is
-        # unchanged.
-        all_planes = _hyperplanes(dim, n_planes * n_tables)
-
-        def el(col: str, i: int) -> str:
-            return f"CAST(element_at({col}, {i + 1}) AS DOUBLE)"
-
-        norm_sql = " + ".join(f"({el(vec_col, i)} * {el(vec_col, i)})" for i in range(dim))
-        tbl_entries = []
-        for t in range(n_tables):
-            bits = []
-            for i, plane in enumerate(all_planes[t * n_planes : (t + 1) * n_planes]):
-                dot = " + ".join(f"({el(vec_col, d)} * {w!r})" for d, w in plane)
-                bits.append(f"CASE WHEN ({dot}) >= 0 THEN {1 << i} ELSE 0 END")
-            tbl_entries.append(
-                f"named_struct('tbl', {t}, 'bucket', CAST({' + '.join(bits)} AS BIGINT))"
-            )
-        base = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("vec"),
-            F.expr(f"sqrt({norm_sql})").alias("norm"),
-            F.expr(f"array({', '.join(tbl_entries)})").alias("buckets"),
-        ).transform(materialize)
-        # The bucket join stays NARROW — (id, tbl, bucket) only; vectors
-        # are fetched back by id AFTER pair dedup, when only the surviving
-        # candidates need them (AQE broadcasts the fetch side when it
-        # fits, plain equijoin otherwise).
-        ent = base.select("id", F.explode("buckets").alias("tb")).select(
-            "id", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
+def _embedding_lsh_pairs(
+    df: DataFrame, id_col: str, vec_col: str, threshold: float, n_planes: int,
+    n_tables: int, dim: int, max_bucket_size: int | None,
+) -> DataFrame:
+    """:func:`embedding_dedup_pairs`' prefilter path without the
+    exact-dup collapse."""
+    # Single-pass index build: norm + per-table sparse-LSH buckets in
+    # ONE codegen projection over the corpus, localCheckpoint'd so the
+    # self-join's two sides and the fetch joins read the materialized
+    # index instead of recomputing plane dots. The vectors stay as
+    # ARRAYS here (no 64-col flatten): wide flattened join inputs sent
+    # Catalyst's constraint propagation into a pairwise-canonicalize
+    # blowup (minutes of pure planning), and dragging 64 columns
+    # through the bucket-join shuffle octupled shuffled bytes.
+    # All chains are built as single SQL expr STRINGS, not Column
+    # arithmetic: every Column `+` is a py4j round trip, and ~2000 of
+    # them cost more wall-clock than the query's execution (measured
+    # ~6s of pure plan construction). SQL `+` is left-associative, so
+    # fold order — and thus every double and every bucket sign — is
+    # unchanged.
+    all_planes = _hyperplanes(dim, n_planes * n_tables)
+    norm_sql = " + ".join(f"({_el(vec_col, i)} * {_el(vec_col, i)})" for i in range(dim))
+    tbl_entries = []
+    for t in range(n_tables):
+        bits = []
+        for i, plane in enumerate(all_planes[t * n_planes : (t + 1) * n_planes]):
+            dot = " + ".join(f"({_el(vec_col, d)} * {w!r})" for d, w in plane)
+            bits.append(f"CASE WHEN ({dot}) >= 0 THEN {1 << i} ELSE 0 END")
+        tbl_entries.append(
+            f"named_struct('tbl', {t}, 'bucket', CAST({' + '.join(bits)} AS BIGINT))"
         )
-        if max_bucket_size is not None:
-            # Skew guard (opt-in): a bucket of k entries contributes k²
-            # join-output rows from ONE shuffle partition's worth of
-            # input, so one hot bucket (a giant near-dup cluster, or a
-            # degenerate all-zeros embedding region) dominates the stage.
-            # Hot buckets are identified with one narrow (tbl, bucket)
-            # count and removed from BOTH join sides via a broadcast
-            # anti-join — the hot set is tiny by definition. Recall
-            # impact: a pair is lost only if EVERY one of its n_tables
-            # colliding buckets is hot. Opt-in (default None) because the
-            # correct cap depends on n_planes vs corpus size: with few
-            # planes every bucket is "hot" and a blanket cap would empty
-            # the index — raise n_planes first, then cap the residue.
-            hot = (
-                ent.groupBy("tbl", "bucket")
-                .agg(F.count(F.lit(1)).alias("k"))
-                .where(F.col("k") > max_bucket_size)
-                .select("tbl", "bucket")
-            )
-            ent = ent.join(F.broadcast(hot), ["tbl", "bucket"], "left_anti")
-        cand = (
-            ent.select(F.col("id").alias("id_a"), "tbl", "bucket")
-            .join(ent.select(F.col("id").alias("id_b"), "tbl", "bucket"), ["tbl", "bucket"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-            .select("id_a", "id_b")
+    base = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("vec"),
+        F.expr(f"sqrt({norm_sql})").alias("norm"),
+        F.expr(f"array({', '.join(tbl_entries)})").alias("buckets"),
+    ).transform(materialize)
+    # The bucket join stays NARROW — (id, tbl, bucket) only; vectors
+    # are fetched back by id AFTER pair dedup, when only the surviving
+    # candidates need them (AQE broadcasts the fetch side when it
+    # fits, plain equijoin otherwise).
+    ent = base.select("id", F.explode("buckets").alias("tb")).select(
+        "id", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")
+    )
+    if max_bucket_size is not None:
+        # Skew guard (opt-in): a bucket of k entries contributes k²
+        # join-output rows from ONE shuffle partition's worth of
+        # input, so one hot bucket (a giant near-dup cluster, or a
+        # degenerate all-zeros embedding region) dominates the stage.
+        # Hot buckets are identified with one narrow (tbl, bucket)
+        # count and removed from BOTH join sides via a broadcast
+        # anti-join — the hot set is tiny by definition. Recall
+        # impact: a pair is lost only if EVERY one of its n_tables
+        # colliding buckets is hot. Opt-in (default None) because the
+        # correct cap depends on n_planes vs corpus size: with few
+        # planes every bucket is "hot" and a blanket cap would empty
+        # the index — raise n_planes first, then cap the residue.
+        hot = (
+            ent.groupBy("tbl", "bucket")
+            .agg(F.count(F.lit(1)).alias("k"))
+            .where(F.col("k") > max_bucket_size)
+            .select("tbl", "bucket")
         )
-        # Explicit repartition: the dedup'd pairs are BYTE-tiny (16 B/row)
-        # so AQE coalesces the shuffle read to 1 partition — and then the
-        # 128-term score projection below runs serially (measured 6.5s →
-        # 1.3s at sf0.1). AQE sizes by bytes, not downstream CPU; a
-        # user-specified partition count is exempt from coalescing.
-        cand = cand.repartition(df.sparkSession.sparkContext.defaultParallelism)
-        pairs = cand.join(
-            base.select(
-                F.col("id").alias("id_a"), F.col("vec").alias("vec_a"),
-                F.col("norm").alias("norm_a"),
-            ),
-            "id_a",
-        ).join(
-            base.select(
-                F.col("id").alias("id_b"), F.col("vec").alias("vec_b"),
-                F.col("norm").alias("norm_b"),
-            ),
-            "id_b",
-        )
-        # score as a left-assoc element_at chain — same fold order as the
-        # flattened chain and the DuckDB list_reduce oracle (bit-identical
-        # doubles), but over array columns so the plan stays narrow.
-        dot_sql = " + ".join(f"({el('vec_a', i)} * {el('vec_b', i)})" for i in range(dim))
-        return pairs.select(
-            "id_a", "id_b",
-            F.expr(f"({dot_sql}) / (norm_a * norm_b)").alias("score"),
-        ).where(F.col("score") >= threshold)
-    else:
-        a, b = flat("a"), flat("b")
-        # the cheap id predicate goes FIRST in the join condition: Spark
-        # evaluates conjuncts left-to-right, so putting the 64-term dot
-        # in a later where() would get it ANDed in FRONT and computed for
-        # all n² combos instead of n²/2
-        pairs = a.join(b, (F.col("id_a") < F.col("id_b")) & (score_expr() >= threshold))
-        # score recomputed in the projection for SURVIVING pairs only —
-        # Catalyst has no CSE across join condition and project, and a
-        # post-join filter would be pushed in FRONT of the cheap id check;
-        # survivors are a tiny fraction of the n^2/2 candidates, so the
-        # recompute is the cheaper side of the trade.
-        return pairs.select("id_a", "id_b", score_expr().alias("score"))
+        ent = ent.join(F.broadcast(hot), ["tbl", "bucket"], "left_anti")
+    cand = (
+        ent.select(F.col("id").alias("id_a"), "tbl", "bucket")
+        .join(ent.select(F.col("id").alias("id_b"), "tbl", "bucket"), ["tbl", "bucket"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+        .select("id_a", "id_b")
+    )
+    # Explicit repartition: the dedup'd pairs are BYTE-tiny (16 B/row)
+    # so AQE coalesces the shuffle read to 1 partition — and then the
+    # 128-term score projection below runs serially (measured 6.5s →
+    # 1.3s at sf0.1). AQE sizes by bytes, not downstream CPU; a
+    # user-specified partition count is exempt from coalescing.
+    cand = cand.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    pairs = cand.join(
+        base.select(
+            F.col("id").alias("id_a"), F.col("vec").alias("vec_a"),
+            F.col("norm").alias("norm_a"),
+        ),
+        "id_a",
+    ).join(
+        base.select(
+            F.col("id").alias("id_b"), F.col("vec").alias("vec_b"),
+            F.col("norm").alias("norm_b"),
+        ),
+        "id_b",
+    )
+    # score as a left-assoc element_at chain — same fold order as the
+    # flattened chain and the DuckDB list_reduce oracle (bit-identical
+    # doubles), but over array columns so the plan stays narrow.
+    dot_sql = " + ".join(f"({_el('vec_a', i)} * {_el('vec_b', i)})" for i in range(dim))
+    return pairs.select(
+        "id_a", "id_b",
+        F.expr(f"({dot_sql}) / (norm_a * norm_b)").alias("score"),
+    ).where(F.col("score") >= threshold)
 
 
 def _hyperplanes(
@@ -552,10 +498,7 @@ def ivf_topk(
         order = np.argsort(d, axis=1)[:, :nprobe]
         return pd.Series([row.astype("int32").tolist() for row in order])
 
-    def el(col: str, i: int) -> str:
-        return f"CAST(element_at({col}, {i + 1}) AS DOUBLE)"
-
-    norm = "sqrt(" + " + ".join(f"({el(vec_col, i)} * {el(vec_col, i)})" for i in range(dim)) + ")"
+    norm = "sqrt(" + " + ".join(f"({_el(vec_col, i)} * {_el(vec_col, i)})" for i in range(dim)) + ")"
 
     c = corpus.select(
         F.col(id_col).alias("vec_id"),
@@ -571,7 +514,7 @@ def ivf_topk(
         F.explode(probe_lists(F.col(vec_col))).alias("list_id"),
     )
 
-    dot = " + ".join(f"({el('q_vec', i)} * {el('c_vec', i)})" for i in range(dim))
+    dot = " + ".join(f"({_el('q_vec', i)} * {_el('c_vec', i)})" for i in range(dim))
     scored = (
         # the gating count runs on the pre-explosion `queries` frame
         # (cheap raw scan, no probe-UDF re-execution) against
@@ -695,10 +638,7 @@ def ivf_index_build(
         d = cnorm2[None, :] - 2.0 * (x @ cmat.T)
         return pd.Series(d.argmin(axis=1)).astype("int32")
 
-    def el(col: str, i: int) -> str:
-        return f"CAST(element_at({col}, {i + 1}) AS DOUBLE)"
-
-    norm = "sqrt(" + " + ".join(f"({el(vec_col, i)} * {el(vec_col, i)})" for i in range(dim)) + ")"
+    norm = "sqrt(" + " + ".join(f"({_el(vec_col, i)} * {_el(vec_col, i)})" for i in range(dim)) + ")"
     assigned = corpus.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("c_vec"),
@@ -797,11 +737,8 @@ def ivf_index_search(
         F.col("list_id").isin(probed_lists)
     )
 
-    def el(col: str, i: int) -> str:
-        return f"CAST(element_at({col}, {i + 1}) AS DOUBLE)"
-
-    qnorm = "sqrt(" + " + ".join(f"({el('q_vec', i)} * {el('q_vec', i)})" for i in range(dim)) + ")"
-    dot = " + ".join(f"({el('q_vec', i)} * {el('c_vec', i)})" for i in range(dim))
+    qnorm = "sqrt(" + " + ".join(f"({_el('q_vec', i)} * {_el('q_vec', i)})" for i in range(dim)) + ")"
+    dot = " + ".join(f"({_el('q_vec', i)} * {_el('c_vec', i)})" for i in range(dim))
     scored = (
         # q is already materialized, so auto mode's bounded count reads
         # the cut, not the source

@@ -35,6 +35,25 @@ from pyspark.sql import DataFrame, Row
 # accumulated in ms, "nsTiming" in ns; everything else is not a time)
 _TIME_TYPES = {"timing": 1.0, "nsTiming": 1e-6}
 
+def _local_frame(spark, rows: list, schema: str) -> DataFrame:
+    """``rows`` (tuples in ``schema`` order) as an Arrow-backed local
+    frame. Spark keeps a frame built from pandas as a LocalRelation, so
+    collecting it launches no job; the list form of createDataFrame
+    goes through an RDD and costs one job (0.31-0.43 s warm on 4 cores)
+    per collect. Object-dtype columns keep longs exact and nulls null."""
+    import pandas as pd
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    return spark.createDataFrame(
+        pd.DataFrame({
+            f.name: pd.Series([r[i] for r in rows], dtype=object)
+            for i, f in enumerate(struct.fields)
+        }),
+        struct,
+    )
+
+
 ANALYZE_SCHEMA = (
     "node_id long, node string, depth int, rows_out long, time_ms double, "
     "bytes_out long, shuffle_bytes long, peak_mem_bytes long, "
@@ -140,7 +159,7 @@ def analyze(df: DataFrame) -> DataFrame:
     jqe.toRdd().count()  # execute THIS plan instance; metrics accumulate
     rows: list[Row] = []
     _walk(jqe.executedPlan(), 0, set(), rows)
-    return df.sparkSession.createDataFrame(rows, ANALYZE_SCHEMA)
+    return _local_frame(df.sparkSession, rows, ANALYZE_SCHEMA)
 
 
 EXEC_SUMMARY_SCHEMA = (
@@ -160,7 +179,8 @@ def _summarize_rows(df: DataFrame, rows: list[Row], n_out, wall_ms) -> DataFrame
         if r.node.startswith(("Scan", "BatchScan"))
         or r.node in ("Range", "LocalTableScan", "InMemoryTableScan")
     ]
-    return df.sparkSession.createDataFrame(
+    return _local_frame(
+        df.sparkSession,
         [
             (
                 sum(s.rows_out or 0 for s in scans),
@@ -297,7 +317,7 @@ def stream_stats(query) -> DataFrame:
                 len(p.sources or []),
             )
         )
-    return spark.createDataFrame(out, STREAM_STATS_SCHEMA)
+    return _local_frame(spark, out, STREAM_STATS_SCHEMA)
 
 
 def exec_summary(df: DataFrame) -> DataFrame:

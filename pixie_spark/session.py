@@ -18,6 +18,27 @@ import os
 from pyspark.sql import SparkSession
 
 
+MAX_DRIVER_MEM_MB = 24 * 1024
+
+
+def _default_driver_mem() -> str:
+    """Half the box's RAM (``MemTotal`` in /proc/meminfo), at most 24g.
+
+    A long session needs heap: 8g OOM'd once the test suite passed ~600
+    tests in one JVM (localCheckpoint blocks and streaming state pile up
+    until the ContextCleaner catches up). But a heap larger than the box
+    gets the whole JVM killed instead: with a fixed 24g on a 15.7 GB
+    box, one test-suite run was OOM-killed at 14.4 GB RSS, while a
+    passing run peaked at 7.0 GB. Half the RAM leaves room for the
+    JVM's off-heap memory and the Python side."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = int(next(ln for ln in f if ln.startswith("MemTotal:")).split()[1])
+    except (OSError, StopIteration, ValueError):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(MAX_DRIVER_MEM_MB, kb // 1024 // 2)}m"
+
+
 def get_spark(app_name: str = "pixie_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -37,12 +58,9 @@ def get_spark(app_name: str = "pixie_spark", cpus: int | None = None) -> SparkSe
         .config("spark.sql.adaptive.skewJoin.enabled", aqe)
         .config("spark.sql.session.timeZone", tz)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Single-JVM local mode: driver heap IS the executor heap. 8g
-        # OOM'd once the test suite passed ~600 tests in one session
-        # (localCheckpoint blocks + streaming state accumulate until the
-        # ContextCleaner catches up); the box has 128 GiB — size for the
-        # long-session case.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # Single-JVM local mode: driver heap IS the executor heap.
+        # SPARK_GRAFT_DRIVER_MEM overrides the box-sized default.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         # Console progress bars write \r-frames to stderr/stdout that
         # pollute line-oriented captures — the round-7 driver bench

@@ -259,18 +259,6 @@ def load_table(
     return normalize_ts_ns(df, "ts", time_range_ns, int64_scale=scale)
 
 
-def register_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view; returns the frames."""
-    out = {}
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = load_table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out
-
-
 def empty_source(spark: SparkSession, schema) -> DataFrame:
     """EmptySource operator (src/carnot/exec/empty_source_node.cc): a
     zero-row frame with a fixed schema."""

@@ -98,11 +98,6 @@ def field(
     return T.StructField(name, dtype, nullable, metadata=meta)
 
 
-def semantic_type_of(schema: T.StructType, name: str) -> str:
-    f = schema[name]
-    return (f.metadata or {}).get("semantic_type", "ST_NONE")
-
-
 # --- UPID helpers (upid.h:60-84) ---------------------------------------------
 # high = (asid << 32) | pid ; low = process start_ticks.
 
@@ -142,17 +137,3 @@ def upid_to_string(upid: Column) -> Column:
         upid_to_pid(upid).cast("string"),
         upid_to_start_ts(upid).cast("string"),
     )
-
-
-# --- time helpers -------------------------------------------------------------
-
-
-def ns_to_timestamp(col: Column) -> Column:
-    """TIME64NS (long ns) → TimestampType (µs precision, truncating).
-    Decimal division — double division rounds ns-scale longs (>2^53)."""
-    return F.timestamp_micros(F.floor(col.cast("decimal(38,0)") / F.lit(1000)).cast("long"))
-
-
-def timestamp_to_ns(col: Column) -> Column:
-    """TimestampType → long ns since epoch."""
-    return F.unix_micros(col) * 1000

@@ -195,6 +195,31 @@ def test_px_result_stats_attached_to_display(spark, sf_dir):
         px.result_stats("never_displayed")
 
 
+def test_stats_frames_collect_without_a_job(spark, sf_dir):
+    """The debug(analyze=True) and result_stats frames are plan-sized
+    driver data built as local frames: collecting them launches no
+    Spark job (a list-form createDataFrame went through an RDD and cost
+    one job per collect). Counted by statusTracker under a job group."""
+    import pixie_spark.api as px
+
+    px.set_context(spark)
+    px._ctx["results"].clear()
+    frames = {"analyze": px.debug(_flagship(spark, sf_dir), "anstats", analyze=True)}
+    px.display(_flagship(spark, sf_dir), "flagship").collect()
+    frames["result_stats"] = px.result_stats("flagship", execute=False)
+    sc = spark.sparkContext
+    for name, frame in frames.items():
+        group = f"stats-frame-collect-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = frame.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows, name
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+    assert frames["result_stats"].collect()[0]["rows_processed"] > 0
+
+
 def _write_batch_files(spark, tmp_path, counts):
     """One parquet file per count → one micro-batch per file with
     maxFilesPerTrigger=1 (the repo's deterministic-stream pattern)."""

@@ -110,12 +110,7 @@ def _km_candidates(docs, bands, num_hashes=64, n=5):
     banding — SAME signature family for both configs so the subset
     relation is structural (4 agreeing rows ⇒ each row agrees)."""
     sig = dd.minhash_signatures(docs, "doc_id", "text", n, num_hashes)
-    return dd._pairs_from_posting_lists(
-        dd._band_entries(sig, bands, num_hashes // bands)
-        .groupBy("band", "bucket")
-        .agg(F.collect_list("doc").alias("docs")),
-        max_list_size=None,
-    )
+    return dd._band_candidates(dd._band_entries(sig, bands, num_hashes // bands), None)
 
 
 def test_production_banding_candidates_subset_of_full_recall(spark, sf_dir):
@@ -143,13 +138,13 @@ def test_production_banding_candidates_subset_of_full_recall(spark, sf_dir):
 
 
 def test_minhash_collapse_exact_identical(spark, sf_dir):
-    """collapse_exact (round-8: exact-dedup-first before signatures and
-    banding) must be RESULT-INVISIBLE on twin-heavy input: the collapsed
-    run returns exactly the uncollapsed run's pair set with identical
-    scores, for BOTH the verified and the estimated variants — including
-    intra-twin pairs at jaccard exactly 1.0, a short (sub-n-words) twin
-    group that must produce NO pairs (no shingles → no signature), and
-    cross-group expansions."""
+    """The exact-dup collapse (exact-dedup-first before signatures and
+    banding) must be RESULT-INVISIBLE on twin-heavy input: each public
+    function returns exactly its private uncollapsed core's pair set
+    with identical scores, for BOTH the verified and the estimated
+    variants and for PPJoin — including intra-twin pairs at jaccard
+    exactly 1.0, a short (sub-n-words) twin group that must produce NO
+    pairs (no shingles → no signature), and cross-group expansions."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     twins = docs
     for i in (1, 2):
@@ -161,16 +156,14 @@ def test_minhash_collapse_exact_identical(spark, sf_dir):
         [(9_000_001, "too short"), (9_000_002, "too short")], ["doc_id", "text"]
     )
     twins = twins.unionByName(short)
-    for fn, score in (
-        (dd.minhash_lsh_verified_pairs, "jaccard"),
-        (dd.minhash_lsh_pairs, "est_jaccard"),
-        (dd.jaccard_pairs, "jaccard"),
+    mh = (5, 64, 16, 0.5, dd.MAX_POSTING_LIST)  # n, num_hashes, bands, t, cap
+    for fn, core, args, score in (
+        (dd.minhash_lsh_verified_pairs, dd._minhash_lsh_verified_pairs, mh, "jaccard"),
+        (dd.minhash_lsh_pairs, dd._minhash_lsh_pairs, mh, "est_jaccard"),
+        (dd.jaccard_pairs, dd._jaccard_pairs, (5, 0.5, dd.MAX_POSTING_LIST), "jaccard"),
     ):
-        kw = dict(n=5, threshold=0.5)
-        if fn is not dd.jaccard_pairs:
-            kw.update(num_hashes=64, bands=16)
-        plain = fn(twins, "doc_id", "text", collapse_exact=False, **kw)
-        fast = fn(twins, "doc_id", "text", collapse_exact=True, **kw)
+        plain = core(twins, "doc_id", "text", *args)
+        fast = fn(twins, "doc_id", "text", *args)
         p = {(r["doc_a"], r["doc_b"]): r[score] for r in plain.collect()}
         f = {(r["doc_a"], r["doc_b"]): r[score] for r in fast.collect()}
         assert f == p, f"{score}: {len(f)} vs {len(p)} pairs"

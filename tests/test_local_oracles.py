@@ -236,7 +236,7 @@ def test_sql_built_signatures_and_bands_pinned_against_replicas(spark):
     signature slice."""
     import random
 
-    from pixie_spark.operators.dedup import _band_entries, _sig_from_hashed, _sig_independent
+    from pixie_spark.operators.dedup import _band_entries, _sig_independent, _sig_km
     from tools.spark_hash import minhash_mix64, xxhash64_longs
 
     rng = random.Random(2024)
@@ -248,7 +248,6 @@ def test_sql_built_signatures_and_bands_pinned_against_replicas(spark):
     sid_rows = spark.createDataFrame(
         [(d, s) for d, sids in docs.items() for s in sids], "doc long, sid long"
     )
-    hashed = sid_rows.select("doc", F.col("sid").alias("h1"), F.xxhash64("sid").alias("h2"))
     num_hashes = 64
 
     def elementwise_min(vectors):
@@ -269,7 +268,7 @@ def test_sql_built_signatures_and_bands_pinned_against_replicas(spark):
         },
     }
     sigs = {
-        "km": _sig_from_hashed(hashed, num_hashes),
+        "km": _sig_km(sid_rows, num_hashes),
         "independent": _sig_independent(sid_rows, num_hashes),
     }
     for name, sig in sigs.items():

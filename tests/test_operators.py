@@ -109,11 +109,11 @@ def test_embedding_dedup_lsh_subset_and_recall(spark, emb):
 
 
 def test_embedding_dedup_collapse_exact_identical(spark, emb):
-    """collapse_exact (round-8: exact-dup collapse before LSH candidate
-    generation — the dup-heavy-corpus scale cut) must be RESULT-
-    INVISIBLE: on a twin-heavy frame (every vector duplicated 3x under
-    shifted ids, the sf1 recipe in miniature) the collapsed run returns
-    exactly the uncollapsed run's pair set with bit-identical scores —
+    """The exact-dup collapse before LSH candidate generation (the
+    dup-heavy-corpus scale cut) must be RESULT-INVISIBLE: on a
+    twin-heavy frame (every vector duplicated 3x under shifted ids, the
+    sf1 recipe in miniature) the prefilter path returns exactly the
+    private uncollapsed core's pair set with bit-identical scores —
     intra-twin pairs, cross-twin expansions, and ordinary pairs alike."""
     twins = emb.select("vec_id", "embedding")
     for i in (1, 2):
@@ -122,9 +122,10 @@ def test_embedding_dedup_collapse_exact_identical(spark, emb):
                 (F.col("vec_id") + 1_000_000 * i).alias("vec_id"), "embedding"
             )
         )
-    kw = dict(threshold=0.4, prefilter=True, n_planes=6, n_tables=8)
-    plain = sim.embedding_dedup_pairs(twins, collapse_exact=False, **kw)
-    fast = sim.embedding_dedup_pairs(twins, collapse_exact=True, **kw)
+    plain = sim._embedding_lsh_pairs(twins, "vec_id", "embedding", 0.4, 6, 8, 64, None)
+    fast = sim.embedding_dedup_pairs(
+        twins, threshold=0.4, prefilter=True, n_planes=6, n_tables=8
+    )
     p = {(r["id_a"], r["id_b"]): r["score"] for r in plain.collect()}
     f = {(r["id_a"], r["id_b"]): r["score"] for r in fast.collect()}
     assert f == p
@@ -132,6 +133,28 @@ def test_embedding_dedup_collapse_exact_identical(spark, emb):
     n = emb.count()
     assert any(a + 1_000_000 == b or a + 2_000_000 == b for a, b in f), "intra missing"
     assert len(f) > n  # more pairs than originals → expansions happened
+
+
+def test_embedding_collapse_group_cap(spark):
+    """The bucket cap carries to the vector collapse's intra expansion,
+    as the posting-list cap does for text: a twin cluster larger than
+    the cap emits no pairs, a smaller one emits all k(k-1)/2, and both
+    runs equal the uncollapsed core's pairs and scores."""
+    v = [float(i + 1) for i in range(8)]
+    rows = [(i, v) for i in range(80)]  # 80 twins, above the cap
+    rows += [(500 + i, [-x for x in v]) for i in range(10)]  # cosine -1 to v
+    twins = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    kw = dict(threshold=0.9, prefilter=True, n_planes=4, n_tables=2, dim=8)
+    for cap, want in ((40, 10 * 9 // 2), (None, 80 * 79 // 2 + 10 * 9 // 2)):
+        got = {
+            (r["id_a"], r["id_b"]): r["score"]
+            for r in sim.embedding_dedup_pairs(twins, max_bucket_size=cap, **kw).collect()
+        }
+        core = sim._embedding_lsh_pairs(twins, "vec_id", "embedding", 0.9, 4, 2, 8, cap)
+        assert len(got) == want, (cap, len(got))
+        assert got == {(r["id_a"], r["id_b"]): r["score"] for r in core.collect()}
+        if cap is not None:
+            assert all(a >= 500 for a, _ in got), "capped cluster emitted pairs"
 
 
 def test_cosine_self_is_one(spark, emb):

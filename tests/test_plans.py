@@ -261,3 +261,24 @@ def test_codegen_cache_sized_for_composed_pipelines(spark):
     cache above one funnel run (measured via CodegenMetrics: 205
     recompiles on the funnel's 2nd run at the default, 0 at 4096)."""
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 1024
+
+
+def test_driver_heap_fits_the_box(spark):
+    """Without SPARK_GRAFT_DRIVER_MEM the session's heap is at most half
+    the box's RAM: a fixed 24g default on a 15.7 GB box once got the
+    test JVM OOM-killed at 14.4 GB RSS. With the variable set, its value
+    is used as given."""
+    import os
+    import re
+
+    conf = spark.sparkContext.getConf().get("spark.driver.memory")
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        assert conf == override
+        return
+    with open("/proc/meminfo") as f:
+        total_mb = int(next(ln for ln in f if ln.startswith("MemTotal:")).split()[1]) // 1024
+    m = re.fullmatch(r"(\d+)([mg])", conf.lower())
+    assert m, conf
+    heap_mb = int(m.group(1)) * (1024 if m.group(2) == "g" else 1)
+    assert 0 < heap_mb <= total_mb // 2
