@@ -53,6 +53,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from pixie_spark.materialize import local_cut
 from pixie_spark.operators import dedup as dd
 from pixie_spark.queries import QUERIES
 from pixie_spark.session import get_spark
@@ -569,9 +570,7 @@ def main() -> None:
         "config": {
             "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
             "aqe": spark.conf.get("spark.sql.adaptive.enabled"),
-            "materialize": spark.conf.get(
-                "spark.pixie_spark.materialize", "localCheckpoint"
-            ),
+            "materialize": "localCheckpoint" if local_cut(spark) else "checkpoint",
             "headline_only": not extras,
             # non-null iff SPARK_GRAFT_BENCH_QUERIES restricted the run
             "query_subset": subset or None,

@@ -55,6 +55,7 @@ from pixie_spark.api.timemod import (
 )
 from pixie_spark.api import otelmod as otel
 from pixie_spark.functions.json_ops import script_reference
+from pixie_spark.plans.analyze import _local_frame
 from pixie_spark.types import make_upid
 
 _ctx: dict[str, Any] = {"spark": None, "tables": {}, "metadata": None, "results": {}, "limit": 10_000}
@@ -327,21 +328,8 @@ def get_agent_status() -> SparkDataFrame:
     import socket
     import time
 
-    spark = _ctx["spark"]
-    if spark is None:
-        raise RuntimeError("px.set_context(spark, ...) first")
+    spark = _spark_or_raise()
     sc = spark.sparkContext
-    rows = []
-    try:  # executor memory map via the JVM scheduler (not in the Py API)
-        mem_status = sc._jsc.sc().getExecutorMemoryStatus()  # noqa: SLF001
-        it = mem_status.iterator()
-        while it.hasNext():
-            entry = it.next()
-            addr = entry._1()
-            mem = entry._2()
-            rows.append((str(addr), int(mem._1()), int(mem._2())))
-    except Exception:  # noqa: BLE001 — fall back to driver-only view
-        rows = [("driver", 0, 0)]
     headers = os.path.isdir(f"/lib/modules/{platform.release()}/build")
     hostname = socket.gethostname()
     try:
@@ -356,9 +344,10 @@ def get_agent_status() -> SparkDataFrame:
             start_ns, now_ns, headers,
             executor, maxb, freeb,
         )
-        for asid, (executor, maxb, freeb) in enumerate(rows)
+        for asid, (executor, maxb, freeb) in enumerate(_executors())
     ]
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         out_rows,
         "agent_id: struct<high: long, low: long>, asid: long, hostname: string, "
         "ip_address: string, agent_state: string, create_time: long, "
@@ -763,7 +752,7 @@ def GetTables() -> PxDataFrame:  # noqa: N802 — PxL name
         }.items()
     )
     return PxDataFrame(
-        spark.createDataFrame(rows, "table_name: string, table_desc: string")
+        _local_frame(spark, rows, "table_name: string, table_desc: string")
     )
 
 
@@ -792,7 +781,8 @@ def GetSchemas() -> PxDataFrame:  # noqa: N802
         for f in df.schema.fields:
             rows.append((tname, f.name, f.dataType.simpleString().upper(), "GENERAL", ""))
     return PxDataFrame(
-        spark.createDataFrame(
+        _local_frame(
+            spark,
             rows,
             "table_name: string, column_name: string, column_type: string, "
             "pattern_type: string, column_desc: string",
@@ -825,7 +815,8 @@ def GetUDFList() -> PxDataFrame:  # noqa: N802
     for scalar functions in the registry."""
     spark = _spark_or_raise()
     return PxDataFrame(
-        spark.createDataFrame(
+        _local_frame(
+            spark,
             _func_rows(lambda n: n not in _UDA_NAMES),
             "name: string, return_type: string, args: string",
         )
@@ -836,7 +827,8 @@ def GetUDAList() -> PxDataFrame:  # noqa: N802
     """UDTF GetUDAList (md_udtfs_impl.h:642): aggregate functions."""
     spark = _spark_or_raise()
     return PxDataFrame(
-        spark.createDataFrame(
+        _local_frame(
+            spark,
             _func_rows(lambda n: n in _UDA_NAMES),
             "name: string, return_type: string, args: string",
         )
@@ -863,7 +855,8 @@ def GetUDTFList() -> PxDataFrame:  # noqa: N802
     }
     rows = [(name, executor, "", "") for name, executor in sorted(udtfs.items())]
     return PxDataFrame(
-        spark.createDataFrame(
+        _local_frame(
+            spark,
             rows, "name: string, executor: string, init_args: string, output_relation: string"
         )
     )
@@ -875,27 +868,27 @@ def GetAgentStatus(include_kelvin: bool = True) -> PxDataFrame:  # noqa: N802
     the Kelvin analogue, so False drops the driver row when executors
     exist separately (a no-op in local mode, where it is the only row)."""
     sdf = get_agent_status()
-    if not include_kelvin and sdf.count() > 1:
+    if not include_kelvin and len(_executors()) > 1:
         sdf = sdf.where(~F.col("executor").contains("driver"))
     return PxDataFrame(sdf)
 
 
-def _executors() -> list[tuple[int, str]]:
-    """(asid, host) per live executor — the 'agent' enumeration behind
-    the per-agent UDTFs. In the reference an agent is a PEM on a node;
-    the Spark analogue is an executor (local mode: driver only)."""
-    spark = _spark_or_raise()
-    sc = spark.sparkContext
+def _executors() -> list[tuple[str, int, int]]:
+    """(address, max_memory_bytes, free_memory_bytes) per live executor,
+    read from the scheduler's block-manager memory map (not in the Py
+    API) — the 'agent' enumeration behind get_agent_status and the
+    per-agent UDTFs, whose asid is the position in this list. In the
+    reference an agent is a PEM on a node; the Spark analogue is an
+    executor (local mode: driver only)."""
+    sc = _spark_or_raise().sparkContext
     out = []
     try:
-        mem_status = sc._jsc.sc().getExecutorMemoryStatus()  # noqa: SLF001
-        it = mem_status.iterator()
-        i = 0
+        it = sc._jsc.sc().getExecutorMemoryStatus().iterator()  # noqa: SLF001
         while it.hasNext():
-            out.append((i, str(it.next()._1())))
-            i += 1
-    except Exception:  # noqa: BLE001
-        out = [(0, "driver")]
+            entry = it.next()
+            out.append((str(entry._1()), int(entry._2()._1()), int(entry._2()._2())))
+    except Exception:  # noqa: BLE001 — fall back to driver-only view
+        out = [("driver", 0, 0)]
     return out
 
 
@@ -909,9 +902,9 @@ def GetProfilerSamplingPeriodMS() -> PxDataFrame:  # noqa: N802
         period = int(spark.conf.get("pixie.profiler.sampling_period_ms"))
     except Exception:  # noqa: BLE001 — unset
         period = 11
-    rows = [(asid, period) for asid, _ in _executors()]
+    rows = [(asid, period) for asid in range(len(_executors()))]
     return PxDataFrame(
-        spark.createDataFrame(rows, "asid: long, profiler_sampling_period_ms: long")
+        _local_frame(spark, rows, "asid: long, profiler_sampling_period_ms: long")
     )
 
 
@@ -925,9 +918,9 @@ def GetLinuxHeadersStatus() -> PxDataFrame:  # noqa: N802
 
     spark = _spark_or_raise()
     installed = os.path.isdir(f"/lib/modules/{platform.release()}/build")
-    rows = [(asid, installed) for asid, _ in _executors()]
+    rows = [(asid, installed) for asid in range(len(_executors()))]
     return PxDataFrame(
-        spark.createDataFrame(rows, "asid: long, kernel_headers_installed: boolean")
+        _local_frame(spark, rows, "asid: long, kernel_headers_installed: boolean")
     )
 
 
@@ -950,7 +943,7 @@ def GetDebugMDWithPrefix(prefix: str = "") -> PxDataFrame:  # noqa: N802
             bare = r["service_name"].split("/", 1)[-1]
             rows.append((f"/service/{r['namespace']}/{bare}", r["service_id"]))
     rows = [kv for kv in rows if kv[0].startswith(prefix)]
-    return PxDataFrame(spark.createDataFrame(rows, "key: string, value: string"))
+    return PxDataFrame(_local_frame(spark, rows, "key: string, value: string"))
 
 
 def GetDebugTableInfo() -> PxDataFrame:  # noqa: N802
@@ -972,7 +965,8 @@ def GetDebugTableInfo() -> PxDataFrame:  # noqa: N802
             nparts = -1
         rows.append((0, name, i, nparts, 0, size, nparts, 0, size, 0, -1, -1))
     return PxDataFrame(
-        spark.createDataFrame(
+        _local_frame(
+            spark,
             rows,
             "asid: long, name: string, id: long, batches_added: long, "
             "batches_expired: long, bytes_added: long, num_batches: long, "
@@ -1005,7 +999,8 @@ def GetTracepointStatus() -> PxDataFrame:  # noqa: N802
         name = q.name or str(q.id)
         rows.append(((_i64(hi), _i64(lo)), name, state, status, name))
     return PxDataFrame(
-        spark.createDataFrame(
+        _local_frame(
+            spark,
             rows,
             "tracepoint_id: struct<high: long, low: long>, name: string, "
             "state: string, status: string, output_tables: string",
@@ -1024,7 +1019,8 @@ def GetCronScriptHistory() -> PxDataFrame:  # noqa: N802
     spark = _spark_or_raise()
     rows = list(_ctx.get("script_history", []))
     return PxDataFrame(
-        spark.createDataFrame(
+        _local_frame(
+            spark,
             rows,
             "script_id: string, timestamp: long, error_message: string, "
             "execution_time_ns: long, compilation_time_ns: long, "
@@ -1054,8 +1050,8 @@ def _HeapGrowthStacks(asid: int = -1) -> PxDataFrame:  # noqa: N802
         rss = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss * 1024
         lines = [f"python;driver_maxrss {rss}"]
     heap = "\n".join(lines)
-    rows = [(a, heap) for a, _ in _executors() if asid < 0 or a == asid]
-    return PxDataFrame(spark.createDataFrame(rows, "asid: long, heap: string"))
+    rows = [(a, heap) for a in range(len(_executors())) if asid < 0 or a == asid]
+    return PxDataFrame(_local_frame(spark, rows, "asid: long, heap: string"))
 
 
 # the reference registers the debug UDTFs under leading-underscore names

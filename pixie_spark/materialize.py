@@ -1,5 +1,4 @@
-"""Shared materialization point — the cluster-mode switch for every
-``localCheckpoint`` in the package.
+"""Shared materialization point: every lineage cut in the package.
 
 Iterative operators (connected components, PageRank, the rollup
 cascade) and multi-consumer plans (a frame feeding both a count and a
@@ -8,32 +7,25 @@ iteration N's plan does not nest N-1 plans, and the rows pinned so two
 consumers observe the SAME evaluation (a non-deterministic source must
 not diverge between them — see ivf_index_search, shard assignment).
 
-``DataFrame.localCheckpoint`` is the right tool in local[] mode (one
-JVM, block-manager storage, no recovery story needed) but is a known
-local-mode artifact at cluster scale: the checkpointed blocks live only
-in executor storage, so ONE lost executor aborts a multi-hour job
-(SCALE.md "Materialization strategy"). This module makes the strategy a
-session config instead of a hard-coded call:
+The session's master picks the cut; there is no setting:
 
-``spark.pixie_spark.materialize`` (default ``localCheckpoint``):
+- ``local`` / ``local[N]`` / ``local[*]`` — ``localCheckpoint``. The
+  driver and the executors are one JVM, so the blocks cannot outlive
+  the process that reads them and no recovery story is needed.
+- every other master, ``local-cluster[...]`` included —
+  ``checkpoint`` into the checkpoint directory
+  (``spark.pixie_spark.checkpointDir``, seeded by
+  ``SPARK_GRAFT_CHECKPOINT_DIR``; point it at HDFS/S3 on a real
+  cluster). A local checkpoint's blocks live only in executor storage,
+  so one lost executor would abort the job (SCALE.md "Materialization
+  strategy"); the reliable checkpoint truncates lineage and survives
+  executor loss.
 
-- ``localCheckpoint`` — fastest; local mode / fault-tolerance-free
-  clusters. Truncates lineage. Executor loss = job failure.
-- ``persist`` — ``persist(StorageLevel.DISK_ONLY)`` + an eager count.
-  Cluster-safe (executor loss recomputes from lineage); does NOT
-  truncate lineage, so sites that REQUIRE truncation (corrupt-record
-  scans, unbounded iteration) escalate per ``require_truncation``.
-  Recompute-under-failure re-evaluates the source, so a genuinely
-  non-deterministic input can diverge after an executor loss — the
-  strategies below close that too.
-- ``checkpoint`` — reliable ``DataFrame.checkpoint()`` against
-  ``spark.pixie_spark.checkpointDir`` (point it at HDFS/S3 on a real
-  cluster). Truncates lineage AND survives executor loss; the strategy
-  a 1000-executor 100 TB run should pick.
-
-The env var ``SPARK_GRAFT_MATERIALIZE`` seeds the config through
-``pixie_spark.session.get_spark`` so the whole test/bench matrix can be
-re-run under each strategy without code changes.
+Both cuts truncate lineage, and ``unpersist()`` frees neither: a
+local checkpoint's blocks belong to its internal RDD, not the cache
+manager, and a reliable checkpoint is files. Spark's ContextCleaner
+reclaims both once the frame is unreferenced (session.py enables
+cleanCheckpoints).
 """
 
 from __future__ import annotations
@@ -41,23 +33,19 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
-CONF_STRATEGY = "spark.pixie_spark.materialize"
 CONF_CKPT_DIR = "spark.pixie_spark.checkpointDir"
-_STRATEGIES = ("localCheckpoint", "persist", "checkpoint")
 
 
-def _strategy(df: DataFrame) -> str:
-    mode = df.sparkSession.conf.get(
-        CONF_STRATEGY, os.environ.get("SPARK_GRAFT_MATERIALIZE", "localCheckpoint")
-    )
-    if mode not in _STRATEGIES:
-        raise ValueError(
-            f"{CONF_STRATEGY}={mode!r}: expected one of {_STRATEGIES}"
-        )
-    return mode
+def _local_master(master: str) -> bool:
+    return master == "local" or master.startswith("local[")
+
+
+def local_cut(spark: SparkSession) -> bool:
+    """True when ``materialize`` cuts with ``localCheckpoint`` on this
+    session, False when it writes a reliable checkpoint."""
+    return _local_master(spark.sparkContext.master)
 
 
 def _ensure_checkpoint_dir(df: DataFrame) -> None:
@@ -71,52 +59,16 @@ def _ensure_checkpoint_dir(df: DataFrame) -> None:
         )
 
 
-def materialize(
-    df: DataFrame,
-    eager: bool = True,
-    require_truncation: bool = False,
-    release: DataFrame | None = None,
-) -> DataFrame:
-    """Cut the plan here, under the session's configured strategy.
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut the plan here, with the cut the session's master calls for.
 
     ``eager`` — evaluate now (default). ``eager=False`` only marks the
     cut; the first downstream action pays for it (used where the caller
     knows a single action follows immediately, e.g. the rollup
-    cascade's next level).
-
-    ``require_truncation`` — the call site is semantically broken
-    without lineage truncation (corrupt-record-only scans, which Spark
-    refuses to analyze against the raw source; iteration whose plan
-    would otherwise nest unboundedly). Under the ``persist`` strategy —
-    which cannot truncate — such sites escalate to a reliable
-    checkpoint, keeping the strategy's cluster-safety rather than
-    silently degrading to localCheckpoint.
-
-    ``release`` — a PREVIOUS materialization this cut supersedes
-    (iterative operators pass the last round's frame). Unpersisted
-    AFTER the new cut is eagerly evaluated, so under the persist
-    strategy a 20-round loop holds 2 cached copies, not 20;
-    localCheckpoint blocks and reliable-checkpoint files are reclaimed
-    by Spark's ContextCleaner once unreferenced (session.py enables
-    cleanCheckpoints), and the explicit unpersist is a safe no-op for
-    them. Only honored when ``eager`` — releasing before a lazy cut
-    evaluates would force a recompute of the frame being released.
+    cascade's next level). A lazy reliable checkpoint evaluates the
+    plan twice, once for that action and once for its write pass.
     """
-    mode = _strategy(df)
-    if mode == "persist" and require_truncation:
-        mode = "checkpoint"
-    if mode == "localCheckpoint":
-        out = df.localCheckpoint(eager=eager)
-    elif mode == "checkpoint":
-        _ensure_checkpoint_dir(df)
-        out = df.checkpoint(eager=eager)
-    else:
-        out = df.persist(StorageLevel.DISK_ONLY)
-        if eager:
-            out.count()
-    if release is not None and eager:
-        try:
-            release.unpersist()
-        except Exception:
-            pass  # a non-persisted frame has nothing to release
-    return out
+    if local_cut(df.sparkSession):
+        return df.localCheckpoint(eager=eager)
+    _ensure_checkpoint_dir(df)
+    return df.checkpoint(eager=eager)

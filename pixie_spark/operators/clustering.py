@@ -40,7 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
-from pixie_spark.materialize import _strategy, materialize
+from pixie_spark.materialize import local_cut, materialize
 
 
 def _checksum_exprs() -> list:
@@ -64,38 +64,32 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _cut_with_checksum(
-    edges: DataFrame, require_truncation: bool = False
-) -> tuple[DataFrame, tuple[int, int]]:
+def _cut_with_checksum(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
     """Materialize the round's edge set AND fingerprint it, in ONE
-    driver action wherever the strategy allows (r12, guide §7 driver
+    driver action wherever the cut allows (r12, guide §7 driver
     barriers — the VERDICT r11 "checksum rides an accumulator on the
     materialize job" item).
 
-    Under ``localCheckpoint`` the checksum is an ``observe`` metric
-    (CollectMetrics → AggregatingAccumulator): the eager cut's single
-    job both stores the round's blocks and fingerprints the rows as
-    they stream past — no second scan of the cached blocks, no
-    aggregate exchange, no extra job. Values are identical to the
-    aggregate path because both metrics are order-insensitive (see
-    :func:`_checksum_exprs`).
+    Under a local master (``localCheckpoint``) the checksum is an
+    ``observe`` metric (CollectMetrics → AggregatingAccumulator): the
+    eager cut's single job both stores the round's blocks and
+    fingerprints the rows as they stream past — no second scan of the
+    cached blocks, no aggregate exchange, no extra job. Values are
+    identical to the aggregate path because both metrics are
+    order-insensitive (see :func:`_checksum_exprs`).
 
-    Under ``persist``/``checkpoint`` the cut stays LAZY and the
-    checksum aggregate is the evaluating action (the r11 shape): a
-    reliable checkpoint's write pass re-computes the plan after the
+    Under any other master the cut is a reliable checkpoint; it stays
+    LAZY and the checksum aggregate is the evaluating action (the r11
+    shape): the checkpoint's write pass re-computes the plan after the
     action (two evaluations), which would double-count an accumulator
     metric — the exchange-based aggregate is immune.
     """
-    if _strategy(edges) == "localCheckpoint":
+    if local_cut(edges.sparkSession):
         obs = Observation()
-        cut = materialize(
-            edges.observe(obs, *_checksum_exprs()),
-            eager=True,
-            require_truncation=require_truncation,
-        )
+        cut = materialize(edges.observe(obs, *_checksum_exprs()))
         row = obs.get
         return cut, (int(row["n"]), int(row["h"]))
-    cut = materialize(edges, eager=False, require_truncation=require_truncation)
+    cut = materialize(edges, eager=False)
     return cut, _checksum(cut)
 
 
@@ -161,13 +155,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
 LOCAL_MAX_EDGES = 100_000
 
 
-def _release(frame: DataFrame) -> None:
-    try:
-        frame.unpersist()
-    except Exception:
-        pass  # a non-persisted frame has nothing to release
-
-
 def _components_on_driver(edges: DataFrame) -> DataFrame:
     """(node, component) of a small cut edge set, union-found on the
     driver: one read of the cut, no star rounds. The smaller root always
@@ -179,7 +166,6 @@ def _components_on_driver(edges: DataFrame) -> DataFrame:
     import pandas as pd
 
     rows = edges.toPandas()
-    _release(edges)
     root: dict = {}
 
     def find(x):
@@ -247,15 +233,8 @@ def connected_components(
     if prev[0] <= LOCAL_MAX_EDGES:
         return _components_on_driver(edges)
     for it in range(max_iter):
-        # truncation required: the alternating-star plan doubles per
-        # round, so persist-mode must escalate to a real checkpoint;
-        # the superseded round's frame is released after the new round
-        # is evaluated (2 copies held, not one per round)
-        prev_edges = edges
-        edges, cur = _cut_with_checksum(
-            _small_star(_large_star(edges)), require_truncation=True
-        )
-        _release(prev_edges)
+        # the cut keeps the alternating-star plan from doubling per round
+        edges, cur = _cut_with_checksum(_small_star(_large_star(edges)))
         if stats is not None:
             stats["rounds"] = it + 1
         if cur == prev:

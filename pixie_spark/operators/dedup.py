@@ -143,6 +143,22 @@ def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int) -> D
     )
 
 
+def _window_ids(w: DataFrame, k: int) -> DataFrame:
+    """(doc, pos, wid) — one row per k-word window of the (doc, pos,
+    word) rows ``w``, starting at ``pos``; wid = xxhash64 over the
+    window's k words, gathered by window-lead like the shingle ids of
+    :func:`_hashed_shingle_rows`."""
+    win = Window.partitionBy("doc").orderBy("pos")
+    leads = [F.col("word").alias("w0")] + [
+        F.lead("word", j).over(win).alias(f"w{j}") for j in range(1, k)
+    ]
+    return (
+        w.select("doc", "pos", *leads)
+        .where(F.col(f"w{k - 1}").isNotNull())
+        .select("doc", "pos", F.xxhash64(*[f"w{j}" for j in range(k)]).alias("wid"))
+    )
+
+
 def _hashed_shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(doc, sh: array<long> DISTINCT shingle ids) in ONE shuffle: the
     window shuffle partitions by doc and the groupBy(doc) that follows
@@ -666,15 +682,7 @@ def duplicate_spans(
     # by_doc=False (r11, measured): the span family's window stage is
     # short; the pinned 32-way pre-partition regressed sf0.1 ~1.2-1.4x
     # (per-task generated-code warmup outweighs map parallelism here)
-    w = _word_rows(df, id_col, text_col, by_doc=False)
-    leads = [F.col("word").alias("w0")] + [
-        F.lead("word", j).over(win).alias(f"w{j}") for j in range(1, k)
-    ]
-    wins = (
-        w.select("doc", "pos", *leads)
-        .where(F.col(f"w{k - 1}").isNotNull())
-        .select("doc", "pos", F.xxhash64(*[f"w{j}" for j in range(k)]).alias("wid"))
-    )
+    wins = _window_ids(_word_rows(df, id_col, text_col, by_doc=False), k)
     dup_wids = (
         wins.groupBy("wid")
         .agg(F.countDistinct("doc").alias("ndocs"))
@@ -716,16 +724,8 @@ def remove_duplicate_spans(
     sequence(pos, pos+k-1) on duplicate hits only (bounded: ≤k rows per
     duplicated window). Output: (doc, text, n_removed).
     """
-    win = Window.partitionBy("doc").orderBy("pos")
     w = _word_rows(df, id_col, text_col, by_doc=False).transform(materialize)
-    leads = [F.col("word").alias("w0")] + [
-        F.lead("word", j).over(win).alias(f"w{j}") for j in range(1, k)
-    ]
-    wins = (
-        w.select("doc", "pos", *leads)
-        .where(F.col(f"w{k - 1}").isNotNull())
-        .select("doc", "pos", F.xxhash64(*[f"w{j}" for j in range(k)]).alias("wid"))
-    )
+    wins = _window_ids(w, k)
     owners = (
         wins.groupBy("wid")
         .agg(F.countDistinct("doc").alias("ndocs"), F.min("doc").alias("owner"))
@@ -793,25 +793,14 @@ def decontaminate_spans(
     (doc, text, n_removed) for every corpus doc — n_removed = 0 for
     clean docs.
     """
-    win = Window.partitionBy("doc").orderBy("pos")
     w = _word_rows(corpus, id_col, text_col, by_doc=False).transform(materialize)
-    leads = [F.col("word").alias("w0")] + [
-        F.lead("word", j).over(win).alias(f"w{j}") for j in range(1, k)
-    ]
-    wins = (
-        w.select("doc", "pos", *leads)
-        .where(F.col(f"w{k - 1}").isNotNull())
-        .select("doc", "pos", F.xxhash64(*[f"w{j}" for j in range(k)]).alias("wid"))
-    )
     probe_wids = (
-        _word_rows(probes, probe_id_col, probe_text_col, by_doc=False)
-        .select("doc", "pos", *leads)
-        .where(F.col(f"w{k - 1}").isNotNull())
-        .select(F.xxhash64(*[f"w{j}" for j in range(k)]).alias("wid"))
+        _window_ids(_word_rows(probes, probe_id_col, probe_text_col, by_doc=False), k)
+        .select("wid")
         .distinct()
     )
     removable = (
-        wins.join(F.broadcast(probe_wids), "wid")
+        _window_ids(w, k).join(F.broadcast(probe_wids), "wid")
         .select("doc", F.explode(F.sequence("pos", F.col("pos") + k - 1)).alias("pos"))
         .dropDuplicates(["doc", "pos"])
         .withColumn("rm", F.lit(True))

@@ -24,8 +24,9 @@ when small) instead of a per-iteration anti-join against the full
 has_out set. When the graph has NO dangling nodes (decided once up
 front — the dangling set is fixed across iterations) the mass is
 exactly 0.0 every round and the whole dangling leg is skipped,
-bit-identically. On that dangling-free path, under the localCheckpoint
-strategy, the per-iteration lineage cut is a LAZY localCheckpoint (r11,
+bit-identically. On that dangling-free path, under a local master
+(whose cut is ``localCheckpoint``, see pixie_spark.materialize), the
+per-iteration lineage cut is a LAZY localCheckpoint (r11,
 the connected-components treatment): between check rounds no consumer
 needs the intermediate ranks, so the cuts accumulate unevaluated and
 the check round's delta read — the window's ONE driver action —
@@ -33,7 +34,7 @@ evaluates the whole chain, materializing each cut as it computes
 through it. One driver action per ``check_every`` iterations instead
 of one per iteration (measured at sf0.1/10 iters: 74→64 Spark jobs,
 −8% interleaved warm median, full 64-bit rank patterns identical).
-Dangling graphs and the persist/checkpoint strategies use EAGER
+Dangling graphs and every other master (reliable checkpoint) use EAGER
 per-iteration cuts (r12, ADVICE r11): lazy cuts would nest the
 unevaluated window into each iteration's dangling broadcast build, and
 a reliable checkpoint's write pass re-evaluates the plan after the
@@ -48,7 +49,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pixie_spark.materialize import _strategy, materialize
+from pixie_spark.materialize import local_cut, materialize
 
 # Largest dangling-node set broadcast into the per-iteration semi-join.
 DANGLING_BROADCAST_MAX = 200_000
@@ -133,20 +134,20 @@ def pagerank(
         if n_dangling <= DANGLING_BROADCAST_MAX:
             dangling_nodes = F.broadcast(dangling_nodes)
     # Lazy cuts are gated (r12, ADVICE r11) to the dangling-free path
-    # under the localCheckpoint strategy:
+    # under a local master:
     # - with dangling nodes, each iteration's mass aggregate reads the
     #   PREVIOUS cut — under lazy cuts that nests every unevaluated
     #   window frame into a BroadcastExchange relationFuture, which
     #   must then compute the whole chain inside the broadcast build
     #   (spark.sql.broadcastTimeout applies); eager cuts keep each
     #   broadcast a cheap 1-row aggregate over materialized ranks.
-    # - under the persist/checkpoint strategies the per-iteration cut
-    #   escalates to a reliable checkpoint, whose write pass re-runs
-    #   the plan AFTER the evaluating action (two evaluations), so the
-    #   delta that gates convergence and the stored ranks could come
-    #   from different evaluations; eager cuts keep the two reads on
-    #   one evaluation (see materialize.py's eager=False contract).
-    lazy_cuts = n_dangling == 0 and _strategy(edges) == "localCheckpoint"
+    # - under any other master the per-iteration cut is a reliable
+    #   checkpoint, whose write pass re-runs the plan AFTER the
+    #   evaluating action (two evaluations), so the delta that gates
+    #   convergence and the stored ranks could come from different
+    #   evaluations; eager cuts keep the two reads on one evaluation
+    #   (see materialize.py's eager=False contract).
+    lazy_cuts = n_dangling == 0 and local_cut(edges.sparkSession)
 
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).transform(materialize)
     # Lazy-cut window (r11; r12 gates it via ``lazy_cuts`` above):
@@ -155,23 +156,14 @@ def pagerank(
     # evaluates the whole window's chain in ONE driver action. Catalyst
     # plans stay truncated either way (the lazy cut's frame is already a
     # LogicalRDD), only the RDD lineage nests check_every deep until
-    # evaluated. The release= contract of materialize() is eager-only,
-    # so superseded frames are tracked and unpersisted manually AFTER
-    # the window action. Lineage safety: the window action checkpoints
-    # the TOPMOST marked cut (checkpointAllMarkedAncestors defaults to
+    # evaluated. Lineage safety: the window action checkpoints the
+    # TOPMOST marked cut (checkpointAllMarkedAncestors defaults to
     # false — intermediate cuts stay cached with their lineage), and
-    # that topmost truncation is what severs the chain the released
-    # ancestors fed. Memory: unpersist() is a cacheManager-level no-op
-    # for localCheckpoint frames (their blocks are persisted on the
-    # internal RDD directly), so reclamation of superseded windows is
-    # ContextCleaner/GC-driven — the block manager can briefly hold
-    # more than the window's check_every+1 narrow (node, rank) frames.
-    # Frames must be unpersisted via the object materialize() RETURNED —
-    # on check rounds `ranks` becomes a derived .drop('__delta')
-    # projection, and DataFrame.unpersist on a derived plan would not
-    # release the underlying persisted copy.
-    window_frames: list[DataFrame] = []
-    prev_window_last = ranks
+    # that topmost truncation is what severs the chain below it. The
+    # superseded cuts' blocks are reclaimed by the ContextCleaner once
+    # unreferenced (unpersist() frees nothing on a checkpointed frame),
+    # so the block manager can briefly hold more than the window's
+    # check_every+1 narrow (node, rank) frames.
     for it in range(max_iter):
         inflow = (
             contrib.join(ranks, "node")
@@ -212,42 +204,21 @@ def pagerank(
             updated = updated.crossJoin(F.broadcast(dangling))
         new_ranks = (
             updated.select("node", *cols)
-            # truncation required — the Catalyst plan would otherwise
-            # nest one join tree per iteration. On the lazy path the
-            # cut costs no driver action here; its evaluation is fused
-            # into the check round's delta read below.
-            .transform(materialize, eager=not lazy_cuts, require_truncation=True)
+            # the cut keeps the Catalyst plan from nesting one join
+            # tree per iteration. On the lazy path it costs no driver
+            # action here; its evaluation is fused into the check
+            # round's delta read below.
+            .transform(materialize, eager=not lazy_cuts)
         )
         if check:
             # the window's (on eager paths: the check round's) delta
             # read; under lazy cuts this one action also evaluates and
             # stores every cut since the previous check round
             delta = new_ranks.agg(F.sum("__delta")).first()[0]
-            for fr in window_frames:
-                try:
-                    fr.unpersist()
-                except Exception:
-                    pass
-            try:
-                prev_window_last.unpersist()
-            except Exception:
-                pass
-            window_frames = []
-            prev_window_last = new_ranks
             ranks = new_ranks.drop("__delta")
             if delta is not None and delta < tol:
                 break
         else:
-            if lazy_cuts:
-                window_frames.append(new_ranks)
-            else:
-                # eager path: the superseded cut is released as soon as
-                # the new one is stored (2 materializations held)
-                try:
-                    prev_window_last.unpersist()
-                except Exception:
-                    pass
-                prev_window_last = new_ranks
             ranks = new_ranks
     return ranks
 

@@ -218,7 +218,7 @@ def rolling_anomalies(
         # the chunked machinery needs a global per-entity row number and
         # a materialize cut — neither exists for an unbounded stream.
         # Fail HERE with the limitation named, not three joins deep at
-        # materialize(b, release=df) on a never-persisted frame.
+        # the materialize cut of the row-numbered frame.
         raise ValueError(
             "rolling_anomalies(chunked=True) requires a batch frame: the "
             "chunked path materializes the source and row-numbers whole "
@@ -304,10 +304,8 @@ def rolling_anomalies(
     # main branch about which rows occupy the block's tail, double- or
     # under-counting a trailing frame. (Pinning the source above is not
     # enough for this: the window's shuffle re-fetches in arbitrary
-    # order per evaluation.) Once b is pinned the source cut is
-    # superseded — release it so the chunked path holds one
-    # materialization, not two.
-    b = materialize(b, release=df)
+    # order per evaluation.)
+    b = materialize(b)
     # boundary context: each block's last baseline_rows rows also feed
     # the NEXT block's first trailing frames (their own output dropped)
     ctx = (

@@ -69,18 +69,10 @@ def get_spark(app_name: str = "pixie_spark", cpus: int | None = None) -> SparkSe
         # line on stdout; nothing in this repo wants the progress bar.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Materialization strategy for every lineage-cut in the package
-        # (pixie_spark.materialize): localCheckpoint (local-mode default)
-        # | persist (DISK_ONLY, cluster-safe) | checkpoint (reliable, for
-        # 1000-executor runs — set spark.pixie_spark.checkpointDir to a
-        # durable filesystem). Runtime-settable via spark.conf.set.
-        .config(
-            "spark.pixie_spark.materialize",
-            os.environ.get("SPARK_GRAFT_MATERIALIZE", "localCheckpoint"),
-        )
-        # reliable-checkpoint files are reclaimed when their RDD is
-        # GC'd — without this the checkpoint strategy leaks one file
-        # set per iteration of CC/PageRank for the app's lifetime
+        # reliable-checkpoint files (pixie_spark.materialize's cut on a
+        # non-local master) are reclaimed when their RDD is GC'd —
+        # without this a cluster run leaks one file set per iteration
+        # of CC/PageRank for the app's lifetime
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # Generated-code cache sized to the package's composed pipelines
         # (optimization r11): the 100-entry default is smaller than ONE
@@ -91,10 +83,7 @@ def get_spark(app_name: str = "pixie_spark", cpus: int | None = None) -> SparkSe
         # 205 recompiles on the funnel's second run at the default, 0 at
         # 4096). Driver-side planning cache, scale-independent: entries
         # are (source, compiled-class) pairs of a few tens of KB.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -63,13 +63,11 @@ def corrupt_line_count(spark: SparkSession, path: str, fields: dict[str, str]) -
     """How many lines failed to parse under the declared schema — the
     ingestion-QA number to alarm on (one bounded aggregate).
 
-    The localCheckpoint is REQUIRED, not an optimization: Spark refuses
-    a query whose referenced columns are only the internal corrupt-
-    record column (the from_json pushdown would have nothing to parse);
+    The lineage cut is REQUIRED, not an optimization: Spark refuses a
+    query whose referenced columns are only the internal corrupt-record
+    column (the from_json pushdown would have nothing to parse);
     materializing first turns it into ordinary data."""
-    df = read_jsonl(spark, path, fields, keep_corrupt=True).transform(
-        materialize, require_truncation=True
-    )
+    df = read_jsonl(spark, path, fields, keep_corrupt=True).transform(materialize)
     return df.where(F.col(CORRUPT_COL).isNotNull()).count()
 
 

@@ -306,6 +306,36 @@ def _rows_to_otel_spans(rows, name_col: str, start_col: str, end_col: str, attr_
     return out
 
 
+def _otel_sink(
+    df: DataFrame,
+    out_dir: str,
+    convert: Callable,
+    prefix: str,
+    output_mode: str,
+    checkpoint_dir: str | None,
+    exporter: Callable | None,
+):
+    """The OTel sinks' shared tail: ``convert(rows)`` maps each
+    partition's rows to OTLP-JSON payloads executor-side, written as
+    ``{prefix}`` files under ``out_dir`` (or handed to ``exporter``). A
+    streaming frame becomes a foreachBatch query in ``output_mode``; a
+    batch frame is exported once, as batch 0."""
+    os.makedirs(out_dir, exist_ok=True)
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.foreachPartition(
+            _partition_exporter(convert, out_dir, prefix, batch_id, exporter)
+        )
+
+    if df.isStreaming:
+        writer = df.writeStream.foreachBatch(sink).outputMode(output_mode)
+        if checkpoint_dir:
+            writer = writer.option("checkpointLocation", checkpoint_dir)
+        return writer.start()
+    sink(df, 0)
+    return None
+
+
 def otel_export_spans(
     df: DataFrame,
     out_dir: str,
@@ -319,26 +349,12 @@ def otel_export_spans(
     """OTel SPANS export (ref: otel_export_sink_node.cc span config,
     plan.proto OTelSpan) — same foreachBatch plumbing as metrics; a span
     per row with [start, end] ns and attribute columns."""
-    attr_cols = attr_cols or []
-    os.makedirs(out_dir, exist_ok=True)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        convert = partial(
-            _rows_to_otel_spans,
-            name_col=name_col, start_col=start_col, end_col=end_col,
-            attr_cols=attr_cols,
-        )
-        batch_df.foreachPartition(
-            _partition_exporter(convert, out_dir, "spans", batch_id, exporter)
-        )
-
-    if df.isStreaming:
-        writer = df.writeStream.foreachBatch(sink).outputMode("append")
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        return writer.start()
-    sink(df, 0)
-    return None
+    convert = partial(
+        _rows_to_otel_spans,
+        name_col=name_col, start_col=start_col, end_col=end_col,
+        attr_cols=attr_cols or [],
+    )
+    return _otel_sink(df, out_dir, convert, "spans", "append", checkpoint_dir, exporter)
 
 
 def _rows_to_otel_logs(rows, body_col: str, ts_col: str, severity_col: str | None, attr_cols: list[str]):
@@ -373,26 +389,12 @@ def otel_export_logs(
     """OTel LOGS export (ref: otel_export_sink_node.cc log config) —
     completes the metrics/spans/logs sink triple; same foreachBatch
     plumbing, one log record per row."""
-    attr_cols = attr_cols or []
-    os.makedirs(out_dir, exist_ok=True)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        convert = partial(
-            _rows_to_otel_logs,
-            body_col=body_col, ts_col=ts_col, severity_col=severity_col,
-            attr_cols=attr_cols,
-        )
-        batch_df.foreachPartition(
-            _partition_exporter(convert, out_dir, "logs", batch_id, exporter)
-        )
-
-    if df.isStreaming:
-        writer = df.writeStream.foreachBatch(sink).outputMode("append")
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        return writer.start()
-    sink(df, 0)
-    return None
+    convert = partial(
+        _rows_to_otel_logs,
+        body_col=body_col, ts_col=ts_col, severity_col=severity_col,
+        attr_cols=attr_cols or [],
+    )
+    return _otel_sink(df, out_dir, convert, "logs", "append", checkpoint_dir, exporter)
 
 
 def otel_export(
@@ -416,23 +418,9 @@ def otel_export(
     bandwidth scales with the cluster instead of bottlenecking on the
     driver.
     """
-    attr_cols = attr_cols or []
-    os.makedirs(out_dir, exist_ok=True)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        convert = partial(
-            _rows_to_otel_metrics,
-            name_col=name_col, value_col=value_col, ts_col=ts_col,
-            attr_cols=attr_cols,
-        )
-        batch_df.foreachPartition(
-            _partition_exporter(convert, out_dir, "batch", batch_id, exporter)
-        )
-
-    if df.isStreaming:
-        writer = df.writeStream.foreachBatch(sink).outputMode("update")
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        return writer.start()
-    sink(df, 0)
-    return None
+    convert = partial(
+        _rows_to_otel_metrics,
+        name_col=name_col, value_col=value_col, ts_col=ts_col,
+        attr_cols=attr_cols or [],
+    )
+    return _otel_sink(df, out_dir, convert, "batch", "update", checkpoint_dir, exporter)

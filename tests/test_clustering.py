@@ -137,8 +137,8 @@ def _count_cuts_and_reads(monkeypatch) -> dict:
 
 
 def test_cc_one_driver_action_per_round(spark, monkeypatch):
-    """r12 action shape of the star loop (default localCheckpoint
-    strategy): each CC round issues exactly ONE driver action — the
+    """r12 action shape of the star loop (a local master, whose cut is
+    localCheckpoint): each CC round issues exactly ONE driver action — the
     eager localCheckpoint whose observe metrics carry the convergence
     checksum. No collect() anywhere in the loop (the former shape
     re-scanned the cached blocks with a separate checksum aggregate).

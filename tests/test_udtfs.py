@@ -140,3 +140,45 @@ def test_cron_script_history(spark, ctx):
     assert "Table 'no_such_table' not found" in bad["error_message"]
     assert all(r["execution_time_ns"] > 0 and r["compilation_time_ns"] > 0 for r in hist)
     assert all(r["timestamp"] > 0 for r in hist)
+
+
+def test_udtf_frames_collect_without_a_job(spark, ctx):
+    """Every UDTF frame is driver-side data built as a local frame:
+    collecting it launches no Spark job (the list form of
+    createDataFrame went through an RDD and cost one job per collect),
+    an empty frame included. Counted by statusTracker under a job
+    group; the frames are built before the group opens."""
+    saved = px._ctx.pop("script_history", None)
+    try:
+        frames = {
+            "GetTables": px.GetTables(),
+            "GetSchemas": px.GetSchemas(),
+            "GetAgentStatus": px.GetAgentStatus(),
+            "GetAgentStatus-no_kelvin": px.GetAgentStatus(include_kelvin=False),
+            "GetUDFList": px.GetUDFList(),
+            "GetUDAList": px.GetUDAList(),
+            "GetUDTFList": px.GetUDTFList(),
+            "GetProfilerSamplingPeriodMS": px.GetProfilerSamplingPeriodMS(),
+            "GetLinuxHeadersStatus": px.GetLinuxHeadersStatus(),
+            "GetTracepointStatus": px.GetTracepointStatus(),
+            "GetCronScriptHistory-empty": px.GetCronScriptHistory(),
+            "_DebugMDGetWithPrefix": px._DebugMDGetWithPrefix("/pod/"),
+            "_DebugTableInfo": px._DebugTableInfo(),
+            "_HeapGrowthStacks": px._HeapGrowthStacks(),
+        }
+    finally:
+        if saved is not None:
+            px._ctx["script_history"] = saved
+    sc = spark.sparkContext
+    for name, frame in frames.items():
+        group = f"udtf-frame-collect-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = frame.to_spark().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        if name.endswith("-empty"):
+            assert rows == [], name
+        elif name != "GetTracepointStatus":  # empty unless a stream runs
+            assert rows, name
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
