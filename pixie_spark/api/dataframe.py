@@ -65,10 +65,12 @@ def _realize_meta(sdf: SparkDataFrame, value, columns: list[str]) -> tuple[Spark
 def _project_meta(sdf: SparkDataFrame, value, name: str | None = None) -> SparkDataFrame:
     """``sdf`` with metadata ``value`` assigned to column ``name`` — in
     place if it exists, else appended — or, with no name, filtered by it:
-    the lookup joins (if any) then ONE projection that keeps the frame's
-    column order and drops every join temp."""
+    the lookup joins then ONE projection that keeps the frame's column
+    order and drops every join temp; with no join, one withColumn/where."""
     columns = sdf.columns
     joined, value = _realize_meta(sdf, value, columns)
+    if joined is sdf:  # inlined dims: no join temps to project away
+        return sdf.where(value) if name is None else sdf.withColumn(name, value)
     if name is None:
         joined = joined.where(value)
     out = [value.alias(name) if c == name else F.col(f"`{c.replace('`', '``')}`") for c in columns]

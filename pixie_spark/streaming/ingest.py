@@ -195,10 +195,6 @@ def _write_batch(df: DataFrame, path: str, batch_id: int) -> None:
     )
 
 
-def _has_batches(spark: SparkSession, path: str) -> bool:
-    return bool(_list_batch_ids(spark, path))
-
-
 def _generation(ids: list[int]):
     """(sentinel_id, covered_upto) of the newest consolidated
     generation among ``ids``, or (None, -1) if never compacted. The

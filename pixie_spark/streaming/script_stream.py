@@ -20,7 +20,7 @@ Spark-first mapping, two tiers:
    *streaming-refresh materialized view*: sources are ingested
    continuously via Structured Streaming into an accumulating snapshot
    (the ring-buffer analogue, with optional retention trimming), and
-   after every micro-batch the verbatim script re-executes over the
+   for every micro-batch the verbatim script re-executes over the
    snapshot, refreshing the named result tables. This matches the
    reference's semantics exactly — a Carnot streaming script's output
    at time t is the script evaluated over the ring buffer's contents
@@ -30,6 +30,18 @@ Spark-first mapping, two tiers:
    the window-bounded snapshot is the same size the reference's PEM
    ring buffers would collectively hold.
 
+   Ingestion and refresh are two stages, as Stirling's writes and
+   Carnot's reads of the table store are (src/table_store/table/
+   table.h:104): the micro-batch sink only appends its batch and hands
+   the refresh off, and one refresh worker per run re-executes the
+   script. Each refresh reads every stream table up to the batch ids
+   the sink had written when it handed off (a ``batch_id <= bound``
+   partition filter), so it sees exactly the snapshot a refresh run
+   inside the sink would have seen, however far ingestion has moved
+   on. At most one refresh waits behind the running one; a sink that
+   finds that slot taken blocks, so refresh lag cannot grow without
+   bound.
+
 ``StreamingScriptRun`` below implements tier 2.
 """
 
@@ -38,11 +50,29 @@ from __future__ import annotations
 import logging
 import os
 import threading
-from typing import Callable, Optional
+import time
+from collections import deque
+from typing import Callable, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 _log = logging.getLogger(__name__)
+
+# refreshes that may wait behind the running one before a sink blocks
+MAX_PENDING_REFRESHES = 1
+# the sink thread's job attribution (Structured Streaming sets both from
+# the query's runId), re-applied to the refresh the sink hands off so its
+# jobs stay in the query's job group
+_JOB_PROPS = ("spark.jobGroup.id", "spark.job.description")
+
+
+class RefreshTiming(NamedTuple):
+    """One refresh as the worker ran it."""
+
+    batch_id: int  # the micro-batch that handed it off
+    bounds: dict  # stream table -> last batch id it read
+    wait_s: float  # batch written -> refresh start (sink blocking included)
+    run_s: float  # refresh start -> results collected and on_refresh returned
 
 
 class StreamingScriptRun:
@@ -51,10 +81,21 @@ class StreamingScriptRun:
     For each entry in ``stream_tables`` the batch fixture frame is laid
     out as ordered parquet chunks (simulating arrival), read back with
     ``readStream`` (``max_files_per_trigger`` files per micro-batch,
-    preserving time order), appended to an accumulating snapshot dir,
-    and the script re-runs over the snapshot after every micro-batch.
+    preserving time order) and appended to an accumulating snapshot dir.
+
+    Two stages. The ``foreachBatch`` sink only appends its micro-batch
+    and hands off a refresh bounded at the batch ids written so far; one
+    worker thread per run takes the refreshes in order and re-runs the
+    script over the snapshot up to those bounds, so a refresh sees the
+    same rows whenever it runs. There is one refresh, and one
+    ``on_refresh(results)`` call, per committed micro-batch, in commit
+    order. ``on_refresh`` runs on the worker thread. At most
+    ``MAX_PENDING_REFRESHES`` wait behind the running refresh; a sink
+    that finds them taken blocks until the worker catches up.
+
     ``results`` always holds the latest refresh's named outputs
-    (collected rows — a stable copy, immune to later appends).
+    (collected rows — a stable copy, immune to later appends), and
+    ``refresh_timings`` one :class:`RefreshTiming` per refresh run.
     """
 
     def __init__(
@@ -72,6 +113,8 @@ class StreamingScriptRun:
         time_col: str = "time_",
         on_refresh: Optional[Callable[[dict], None]] = None,
     ):
+        from pixie_spark.streaming.ingest import _list_batch_ids
+
         self._spark = spark
         self._script = script
         self._static = dict(static_tables)
@@ -83,10 +126,17 @@ class StreamingScriptRun:
         self._work = work_dir
         self._queries = []
         self._schemas: dict[str, object] = {}
-        self._lock = threading.Lock()  # one refresh at a time
+        # hand-off state, all under _cv: the last batch id written per
+        # stream table, refreshes not yet started, whether one is running
+        self._cv = threading.Condition()
+        self._written: dict[str, int] = {}
+        self._pending: deque = deque()
+        self._busy = False
+        self._stopped = False
         self.results: dict[str, list] = {}
         self.refresh_count = 0
         self.refresh_errors: list[str] = []
+        self.refresh_timings: list[RefreshTiming] = []
 
         for name, df in stream_tables.items():
             src = os.path.join(work_dir, "src", name)
@@ -107,10 +157,13 @@ class StreamingScriptRun:
                     .parquet(src)
                 )
             self._schemas[name] = df.schema
+            # a restart's refreshes also read what the last run appended
+            ids = _list_batch_ids(spark, self._accum(name))
+            if ids:
+                self._written[name] = ids[-1]
 
         for name in stream_tables:
             src = os.path.join(work_dir, "src", name)
-            accum = os.path.join(work_dir, "accum", name)
             ckpt = os.path.join(work_dir, "ckpt", name)
             stream = (
                 spark.readStream.schema(self._schemas[name])
@@ -118,16 +171,27 @@ class StreamingScriptRun:
                 .parquet(src)
             )
             q = (
-                stream.writeStream.foreachBatch(self._ingest_and_refresh(name, accum))
+                stream.writeStream.foreachBatch(self._sink(name))
                 .option("checkpointLocation", ckpt)
                 .start()
             )
             self._queries.append(q)
+        # hand-offs made before it starts wait in _pending
+        self._worker = threading.Thread(
+            target=self._refresh_loop, name="pxl-stream-refresh", daemon=True
+        )
+        self._worker.start()
 
-    # -- ingestion + refresh --------------------------------------------------
+    def _accum(self, name: str) -> str:
+        return os.path.join(self._work, "accum", name)
 
-    def _ingest_and_refresh(self, name: str, accum: str):
+    # -- stage 1: ingestion ---------------------------------------------------
+
+    def _sink(self, name: str):
         from pixie_spark.streaming.ingest import _write_batch
+
+        accum = self._accum(name)
+        sc = self._spark.sparkContext
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
             # distributed idempotent append of this micro-batch to the
@@ -136,47 +200,85 @@ class StreamingScriptRun:
             # the partial partition instead of duplicating rows
             # (parquet here; Delta on a production cluster)
             _write_batch(batch_df, accum, batch_id)
-            with self._lock:
-                try:
-                    self._refresh()
-                except Exception as e:  # noqa: BLE001 — surfaced via handle
-                    # logged when it happens; await_drained raises them all
-                    _log.exception("streaming refresh failed at batch_id=%d", batch_id)
-                    self.refresh_errors.append(f"{type(e).__name__}: {e}")
+            written_at = time.perf_counter()
+            job = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
+            with self._cv:
+                self._written[name] = batch_id
+                while len(self._pending) >= MAX_PENDING_REFRESHES and not self._stopped:
+                    self._cv.wait()
+                if self._stopped:
+                    return  # the rows are appended; a restart refreshes them
+                self._pending.append((batch_id, dict(self._written), job, written_at))
+                self._cv.notify_all()
 
         return sink
 
-    def _snapshot(self, name: str) -> DataFrame:
+    # -- stage 2: refresh -----------------------------------------------------
+
+    def _refresh_loop(self) -> None:
+        spark = self._spark
+        sc = spark.sparkContext
+        # this thread's JVM side starts with no active session; the
+        # sink threads have the stream's
+        getattr(spark._jvm, "org.apache.spark.sql.classic.SparkSession").setActiveSession(
+            spark._jsparkSession
+        )
+        while True:
+            with self._cv:
+                while not (self._pending or self._stopped):
+                    self._cv.wait()
+                if self._stopped:
+                    return
+                batch_id, bounds, job, written_at = self._pending.popleft()
+                self._busy = True
+                self._cv.notify_all()
+            start = time.perf_counter()
+            try:
+                for k, v in job.items():
+                    sc.setLocalProperty(k, v)
+                self._refresh(bounds)
+            except Exception as e:  # noqa: BLE001 — surfaced via handle
+                # logged when it happens; await_drained raises them all
+                _log.exception("streaming refresh failed at batch_id=%d", batch_id)
+                self.refresh_errors.append(f"{type(e).__name__}: {e}")
+            finally:
+                end = time.perf_counter()
+                with self._cv:
+                    self.refresh_timings.append(
+                        RefreshTiming(batch_id, bounds, start - written_at, end - start)
+                    )
+                    self._busy = False
+                    self._cv.notify_all()
+
+    def _snapshot(self, name: str, upto: int) -> DataFrame:
+        from pyspark.sql import functions as F
+
         from pixie_spark.streaming.ingest import BATCH_COL
 
-        accum = os.path.join(self._work, "accum", name)
         # declared schema keeps exact table types (partition discovery
         # alone would relax nullability); Spark appends the undeclared
-        # batch_id partition column after it — dropped here
+        # batch_id partition column after it — pruned to this refresh's
+        # bound, then dropped
         df = (
             self._spark.read.schema(self._schemas[name])
-            .parquet(accum)
+            .parquet(self._accum(name))
+            .where(F.col(BATCH_COL) <= upto)
             .drop(BATCH_COL)
         )
         if self._retention_ns is not None:
             # ring-buffer retention: scripts only ever see the window
-            from pyspark.sql import functions as F
-
             import pixie_spark.api as px
 
             lo = (px.now() or 0) - self._retention_ns
             df = df.where(F.col(self._time_col) >= F.lit(lo))
         return df
 
-    def _refresh(self) -> None:
+    def _refresh(self, bounds: dict[str, int]) -> None:
         import pixie_spark.api as px
 
-        from pixie_spark.streaming.ingest import _has_batches
-
         tables = dict(self._static)
-        for name in self._schemas:
-            if _has_batches(self._spark, os.path.join(self._work, "accum", name)):
-                tables[name] = self._snapshot(name)
+        for name, upto in bounds.items():
+            tables[name] = self._snapshot(name, upto)
         for name, df in tables.items():
             px.register_table(name, df)
         out = px.run_script(self._script, calls=self._calls)
@@ -190,18 +292,32 @@ class StreamingScriptRun:
     # -- lifecycle ------------------------------------------------------------
 
     def await_drained(self, timeout_s: float = 120.0) -> "StreamingScriptRun":
-        """Block until every source file is ingested and the final
-        refresh has run, then stop the ingestion queries."""
+        """Block until every source file is ingested and every refresh
+        handed off has run, then stop the ingestion queries and the
+        worker."""
         for q in self._queries:
             q.processAllAvailable()
+        with self._cv:
+            while (self._pending or self._busy) and self._worker.is_alive():
+                self._cv.wait(1.0)
         self.stop()
         if self.refresh_errors:
             raise RuntimeError(f"refresh errors: {self.refresh_errors[:3]}")
         return self
 
     def stop(self) -> None:
+        """Stop ingestion and the refresh worker. Refreshes not yet
+        started are dropped (their rows stay in the snapshot, where a
+        restarted run's refreshes read them); a running one finishes
+        first, and none runs after this returns."""
+        with self._cv:
+            self._stopped = True
+            self._pending.clear()
+            self._cv.notify_all()  # releases a sink waiting for a slot
         for q in self._queries:
             try:
                 q.stop()
             except Exception:  # noqa: BLE001 — already stopped
                 pass
+        if threading.current_thread() is not self._worker:
+            self._worker.join()

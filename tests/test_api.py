@@ -250,3 +250,60 @@ def test_dataframe_select_and_relative_time(ctx):
     assert recent.to_spark().count() == 0
     all_rows = px.DataFrame("duration_table", start_time=0)
     assert all_rows.to_spark().count() == 10
+
+
+REQUEST_STATS_SHAPED = """
+import px
+df = px.DataFrame(table='http_events', start_time='-60m')
+df.service = df.ctx['service']
+df.timestamp = px.bin(df.time_, px.seconds(10))
+df.failure = df.resp_status >= 400
+df = df.groupby(['service', 'timestamp']).agg(
+    latency_quantiles=('latency', px.quantiles),
+    errors=('failure', px.sum),
+    throughput=('latency', px.count),
+)
+df.p99 = px.pluck_float64(df.latency_quantiles, 'p99')
+df = df.groupby('service').agg(
+    windows=('timestamp', px.count),
+    requests=('throughput', px.sum),
+    errors=('errors', px.sum),
+    p99_max=('p99', px.max),
+)
+px.display(df, 'request_stats')
+"""
+
+
+def test_script_build_py4j_round_trips(spark):
+    """Building a request-stats script's plan (no job) stays cheap in
+    driver <-> JVM round trips: no per-call call-site capture, and an
+    inlined ctx lookup is one withColumn rather than a re-select of every
+    column. With call-site capture on, the same build made ~940."""
+    from py4j.clientserver import ClientServerConnection
+
+    from pixie_spark.functions.metadata import MetadataResolver
+    from pixie_spark.sources.fixtures import BASE_NS, HOUR_NS, http_events_fixture, k8s_fixtures
+
+    pods, services = k8s_fixtures(spark)
+    px.set_context(
+        spark, tables={"http_events": http_events_fixture(spark, n=200)},
+        metadata=MetadataResolver(pods, services),
+    )
+    px.set_now(BASE_NS + HOUR_NS)
+    real = ClientServerConnection.send_command
+    sent = []
+
+    def counting(self, command):
+        sent.append(1)
+        return real(self, command)
+
+    try:
+        px.run_script(REQUEST_STATS_SHAPED)  # prepares the resolver's dims
+        ClientServerConnection.send_command = counting
+        try:
+            px.run_script(REQUEST_STATS_SHAPED)
+        finally:
+            ClientServerConnection.send_command = real
+    finally:
+        px.set_now(None)
+    assert 0 < len(sent) <= 300, f"{len(sent)} py4j commands to build the plan"

@@ -253,6 +253,247 @@ def test_refresh_error_is_logged_when_caught(spark, tmp_path, caplog):
         run.stop()
 
 
+ROWS_SCRIPT = "import px\ndf = px.DataFrame('t')\npx.display(df, 'out')\n"
+
+
+def _batch_rows(spark, accum):
+    """{batch_id: rows} of a run's snapshot directory."""
+    return {
+        r["batch_id"]: r["count"]
+        for r in spark.read.parquet(accum).groupBy("batch_id").count().collect()
+    }
+
+
+def _rows_table(spark, n):
+    return spark.createDataFrame([(i * 1_000_000, i) for i in range(n)], "time_ long, v long")
+
+
+def test_held_refresh_sees_its_batch_bounded_snapshot(spark, tmp_path):
+    """Ingestion runs ahead of a refresh held in on_refresh, yet each
+    refresh reads exactly the batches written when its own batch was
+    handed off: the row counts are the prefix sums of the batch sizes,
+    one refresh per batch, in batch order."""
+    import threading
+
+    import pixie_spark.api as px
+    from pixie_spark.streaming.script_stream import StreamingScriptRun
+
+    px.set_context(spark)
+    work = tmp_path / "held"
+    release = threading.Event()
+    seen = []
+
+    def on_refresh(results):
+        seen.append(len(results["out"]))
+        release.wait(60)
+
+    run = StreamingScriptRun(
+        spark, ROWS_SCRIPT, stream_tables={"t": _rows_table(spark, 40)}, static_tables={},
+        work_dir=str(work), chunks=4, on_refresh=on_refresh,
+    )
+    try:
+        # batch 2 written: batches 0 and 1 have committed behind the held refresh
+        assert _wait_for(lambda: (work / "accum" / "t" / "batch_id=2").exists())
+        assert seen == [len(run.results["out"])] and run.refresh_count == 1
+        release.set()
+        run.await_drained()
+    finally:
+        release.set()
+        run.stop()
+    sizes = _batch_rows(spark, str(work / "accum" / "t"))
+    assert sorted(sizes) == list(range(len(sizes))) and len(sizes) >= 3
+    prefix = [sum(sizes[b] for b in range(i + 1)) for i in range(len(sizes))]
+    assert seen == prefix and prefix[-1] == 40
+    assert run.refresh_count == len(sizes)
+    assert [(t.batch_id, t.bounds) for t in run.refresh_timings] == [
+        (b, {"t": b}) for b in range(len(sizes))
+    ]
+    assert all(t.wait_s >= 0 and t.run_s > 0 for t in run.refresh_timings)
+
+
+def test_stop_with_held_refresh_and_blocked_sink_then_resume(spark, tmp_path):
+    """Kill/resume with the pipeline full: a refresh is held, one waits,
+    and the sink is blocked on the hand-off. stop() returns once the held
+    refresh ends, leaves no worker behind, and nothing of the stopped run
+    refreshes afterwards. A second run on the same work_dir resumes from
+    the checkpoint and its final refresh equals a batch run."""
+    import threading
+
+    import pixie_spark.api as px
+    from pixie_spark.streaming.script_stream import StreamingScriptRun
+
+    df = _rows_table(spark, 60)
+    px.set_context(spark, tables={"t": df})
+    script = (
+        "import px\ndf = px.DataFrame('t')\n"
+        "df = df.groupby('v').agg(n=('time_', px.count), s=('time_', px.sum))\n"
+        "px.display(df, 'out')\n"
+    )
+    want = sorted(map(tuple, px.run_script(script)["out"].collect()))
+    work = tmp_path / "kill"
+    release = threading.Event()
+    refreshed1 = []
+
+    def hold(results):
+        refreshed1.append(len(results["out"]))
+        release.wait(60)
+
+    mk = lambda on_refresh: StreamingScriptRun(  # noqa: E731
+        spark, script, stream_tables={"t": df}, static_tables={},
+        work_dir=str(work), chunks=6, on_refresh=on_refresh,
+    )
+    run1 = mk(hold)
+    stopper = threading.Thread(target=run1.stop)
+    try:
+        assert _wait_for(lambda: (work / "accum" / "t" / "batch_id=2").exists())
+        stopper.start()
+        stopper.join(2)
+        assert stopper.is_alive(), "stop() returned while a refresh was still running"
+        release.set()
+        stopper.join(60)
+        assert not stopper.is_alive(), "stop() deadlocked"
+    finally:
+        release.set()
+        if not stopper.is_alive():
+            run1.stop()
+    assert not run1._worker.is_alive()
+    assert refreshed1 == [len(run1.results["out"])] and run1.refresh_count == 1
+    time.sleep(2)
+    assert run1.refresh_count == 1 and len(refreshed1) == 1
+
+    run2 = mk(None)
+    try:
+        run2.await_drained()
+    finally:
+        run2.stop()
+        px.register_table("t", df)
+    assert run1.refresh_count == 1 and len(refreshed1) == 1
+    assert run2.refresh_count >= 1, "the resumed run ingested nothing"
+    assert sorted(map(tuple, run2.results["out"])) == want
+
+
+def test_two_stream_tables_final_refresh_equals_batch(spark, tmp_path):
+    """Two stream tables feed one worker: every refresh reads both up
+    to their own bounds, and the final one equals the batch result."""
+    import pixie_spark.api as px
+    from pixie_spark.streaming.script_stream import StreamingScriptRun
+
+    a = spark.createDataFrame([(i * 1_000_000, i % 5, i) for i in range(30)], "time_ long, k long, v long")
+    b = spark.createDataFrame([(i * 3_000_000, i % 5, 2 * i) for i in range(20)], "time_ long, k long, w long")
+    px.set_context(spark, tables={"a": a, "b": b})
+    script = (
+        "import px\n"
+        "a = px.DataFrame('a').groupby('k').agg(n=('v', px.count), v=('v', px.sum))\n"
+        "b = px.DataFrame('b').groupby('k').agg(m=('w', px.count), w=('w', px.sum))\n"
+        "df = a.merge(b, how='inner', left_on='k', right_on='k', suffixes=['', '_b'])\n"
+        "px.display(df['k', 'n', 'v', 'm', 'w'], 'out')\n"
+    )
+    want = sorted(map(tuple, px.run_script(script)["out"].collect()))
+    assert len(want) == 5
+    run = StreamingScriptRun(
+        spark, script, stream_tables={"a": a, "b": b}, static_tables={},
+        work_dir=str(tmp_path / "two"), chunks=3,
+    )
+    try:
+        run.await_drained()
+    finally:
+        run.stop()
+        px.set_context(spark, tables={"a": a, "b": b})
+    assert sorted(map(tuple, run.results["out"])) == want
+    assert run.refresh_count == 6  # one per micro-batch of either stream
+    last = run.refresh_timings[-1].bounds
+    assert last == {"a": 2, "b": 2}
+
+
+def test_many_stream_tables_hand_off_under_thread_switching(spark, tmp_path):
+    """More stream tables than cores hand off to the one worker while the
+    interpreter switches threads every 100 us: there is one refresh per
+    micro-batch, no table's bound ever goes back from one refresh to the
+    next (a lost update of the written ids or an out-of-order hand-off
+    would), and the final refresh reads every batch and equals the batch
+    result."""
+    import sys
+
+    import pixie_spark.api as px
+    from pixie_spark.streaming.script_stream import StreamingScriptRun
+
+    names = [f"t{i}" for i in range(6)]
+    tables = {
+        n: spark.createDataFrame(
+            [(j * 1_000_000, j % 3, 10 * i + j) for j in range(9)], "time_ long, k long, v long"
+        )
+        for i, n in enumerate(names)
+    }
+    px.set_context(spark, tables=tables)
+    script = (
+        "import px\ndf = px.DataFrame('t0')\n"
+        + "".join(f"df = df.append(px.DataFrame('{n}'))\n" for n in names[1:])
+        + "df = df.groupby('k').agg(n=('v', px.count), s=('v', px.sum))\n"
+        "px.display(df, 'out')\n"
+    )
+    want = sorted(map(tuple, px.run_script(script)["out"].collect()))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        run = StreamingScriptRun(
+            spark, script, stream_tables=tables, static_tables={},
+            work_dir=str(tmp_path / "many"), chunks=3,
+        )
+        try:
+            run.await_drained()
+        finally:
+            run.stop()
+    finally:
+        sys.setswitchinterval(interval)
+        px.set_context(spark, tables=tables)
+    last = {n: max(_batch_rows(spark, str(tmp_path / "many" / "accum" / n))) for n in names}
+    assert run.refresh_count == sum(b + 1 for b in last.values())
+    bounds = [t.bounds for t in run.refresh_timings]
+    for before, after in zip(bounds, bounds[1:]):
+        assert all(before[n] <= after.get(n, -1) for n in before), (before, after)
+    assert bounds[-1] == last
+    assert sorted(map(tuple, run.results["out"])) == want
+
+
+def test_refresh_jobs_run_in_the_query_job_group(spark, tmp_path):
+    """The refresh worker re-applies the job group Structured Streaming
+    gives the sink thread (the query's runId), so a refresh's jobs are
+    attributed to the query that handed it off; no job of the run is
+    left without a group."""
+    import pixie_spark.api as px
+    from pixie_spark.streaming.script_stream import StreamingScriptRun
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    px.set_context(spark)
+    groups = []
+
+    def on_refresh(_results):
+        groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+
+    sc.setJobGroup("refresh-attribution-layout", "layout")
+    try:
+        spark.range(1).collect()
+        first = max(tracker.getJobIdsForGroup("refresh-attribution-layout"))
+        run = StreamingScriptRun(
+            spark, ROWS_SCRIPT, stream_tables={"t": _rows_table(spark, 12)}, static_tables={},
+            work_dir=str(tmp_path / "groups"), chunks=2, on_refresh=on_refresh,
+        )
+        try:
+            run.await_drained()
+        finally:
+            run.stop()
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(k, None)
+    run_id = str(run._queries[0].runId)
+    assert groups == [run_id] * run.refresh_count and run.refresh_count == 2
+    query_jobs = tracker.getJobIdsForGroup(run_id)
+    # each batch's append plus at least one collect per refresh
+    assert len(query_jobs) >= 2 * run.refresh_count
+    assert [j for j in tracker.getJobIdsForGroup(None) if j > first] == []
+
+
 def test_display_passthrough_stream_appends(spark, events_dir, tmp_path):
     """px.display of a NON-aggregated stream must fall back to append
     mode (complete is invalid without a streaming aggregation)."""
