@@ -108,13 +108,17 @@ def export(df, data) -> None:
     by the OTelExportSink node in the reference). Rows are converted to
     OTLP-JSON and exported FROM THE EXECUTORS via foreachPartition — a
     ``file://``/bare-path endpoint writes JSONL per partition (the
-    sandbox collector), http(s) POSTs per partition.
-    Metric containers require a ``time_`` column, like the reference's
-    compiler ("must have a time_ column of type TIME64NS")."""
+    sandbox collector), http(s) POSTs per partition. The containers are
+    ``px.otel.metric.Gauge``/``Summary``, ``px.otel.trace.Span`` and
+    ``px.otel.log.Log``. A streaming frame's export is a foreachBatch
+    query, returned and recorded in ``streams()``; a batch frame is
+    exported at once and None is returned. Metric containers require a ``time_`` column,
+    like the reference's compiler ("must have a time_ column of type
+    TIME64NS")."""
     import os
     from functools import partial
 
-    from pixie_spark.streaming import _partition_exporter
+    from pixie_spark.streaming import _otel_sink
 
     sdf = df.to_spark() if hasattr(df, "to_spark") else df
     containers = list(data.data)
@@ -142,20 +146,12 @@ def export(df, data) -> None:
         exporter = None
         path = url[len("file://"):] if url.startswith("file://") else url
         os.makedirs(path, exist_ok=True)
-    if sdf.isStreaming:
-        # One-pipeline streaming export (stream_ir.h:44 + the reference's
-        # OTelExportSink): each micro-batch's partitions post their own
-        # payloads executor-side, exactly like the batch path. The query
-        # handle lands in streams() under a stable name for stop/await.
-        def sink(batch_df: SparkDataFrame, batch_id: int) -> None:
-            batch_df.foreachPartition(
-                _partition_exporter(convert, path, "export", batch_id, exporter)
-            )
-
-        q = sdf.writeStream.foreachBatch(sink).outputMode("update").start()
+    q = _otel_sink(sdf, convert, path, batch, exporter)
+    if q is not None:
+        # one-pipeline streaming export (stream_ir.h:44): the query
+        # handle lands in streams() under a stable name for stop/await
         _ctx.setdefault("streams", {})[f"__otel_export_{batch}"] = q
-        return q
-    sdf.foreachPartition(_partition_exporter(convert, path, "export", batch, exporter))
+    return q
 
 
 def set_context(

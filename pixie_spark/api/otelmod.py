@@ -1,14 +1,14 @@
 """``px.otel`` — the PxL OpenTelemetry export configuration surface
 (ref: src/carnot/planner/objects/otel.h:37-249, otel.cc): declarative
-containers mapping DataFrame columns onto OTel Gauge / Summary / Span
-shapes, plus the Endpoint config. ``px.export(df, px.otel.Data(...))``
+containers mapping DataFrame columns onto OTel Gauge / Summary / Span /
+Log shapes, plus the Endpoint config. ``px.export(df, px.otel.Data(...))``
 (pixie_module.h:77) executes the export.
 
 Spark-first execution difference: the reference compiles these into an
 OTelExportSink plan node each Carnot instance runs; here ``px.export``
 maps each partition's rows to OTLP-JSON payloads ON THE EXECUTORS
-(foreachPartition — same partition-exporter machinery as
-pixie_spark.streaming's OTel sinks) so export bandwidth scales with the
+(foreachPartition, through pixie_spark.streaming's one export tail, for
+batch and streaming frames) so export bandwidth scales with the
 cluster instead of funneling through the driver.
 """
 
@@ -74,8 +74,8 @@ class Endpoint:
 class _Container:
     """One Data entry: a column→OTel mapping (OTelDataContainer)."""
 
-    kind: str  # 'gauge' | 'summary' | 'span'
-    name: str | tuple  # metric/span name; ('col', c) when column-backed
+    kind: str  # 'gauge' | 'summary' | 'span' | 'log'
+    name: str | tuple  # metric/span name; ('col', c) when column-backed; '' for logs
     fields: dict
     attributes: dict
     description: str = ""
@@ -150,6 +150,22 @@ def _span(
     )
 
 
+def _log(time, body, severity=None, attributes: dict | None = None):
+    """px.otel.log.Log: one log record per row, from a time (ns) column,
+    a body column, an optional severity-text column and attributes.
+    Rows whose time or body is null are skipped."""
+    return _Container(
+        kind="log",
+        name="",
+        fields={
+            "time": _colname(time),
+            "body": _colname(body),
+            "severity": _colname(severity) if severity is not None else None,
+        },
+        attributes=_attr_map(attributes),
+    )
+
+
 @dataclass
 class Data:
     """px.otel.Data (otel.h:45-70): resource attributes + a list of
@@ -177,6 +193,7 @@ trace = SimpleNamespace(
     SPAN_KIND_PRODUCER=SPAN_KIND_PRODUCER,
     SPAN_KIND_CONSUMER=SPAN_KIND_CONSUMER,
 )
+log = SimpleNamespace(Log=_log)
 
 
 # ---------------------------------------------------------------------------
@@ -200,15 +217,15 @@ def rows_to_otlp(rows, resource: dict, containers: list) -> list:
     so foreachPartition can pickle it."""
     import uuid as _uuid
 
-    by_res: dict = {}  # resolved resource tuple → (metrics, spans)
+    by_res: dict = {}  # resolved resource tuple → (metrics, spans, logs)
     for r in rows:
         d = r.asDict() if hasattr(r, "asDict") else dict(r)
         res_resolved = {
             k: (v[1] if v[0] == "lit" else str(d.get(v[1], "")))
             for k, v in resource.items()
         }
-        metrics, spans = by_res.setdefault(
-            tuple(sorted(res_resolved.items())), ([], [])
+        metrics, spans, logs = by_res.setdefault(
+            tuple(sorted(res_resolved.items())), ([], [], [])
         )
         for c in containers:
             if c.kind == "gauge":
@@ -281,8 +298,21 @@ def rows_to_otlp(rows, resource: dict, containers: list) -> list:
                         "attributes": _attrs_json(c.attributes, d),
                     }
                 )
+            elif c.kind == "log":
+                t, body = d.get(c.fields["time"]), d.get(c.fields["body"])
+                if t is None or body is None:
+                    continue
+                rec = {
+                    "timeUnixNano": int(t),
+                    "body": {"stringValue": str(body)},
+                    "attributes": _attrs_json(c.attributes, d),
+                }
+                sev = c.fields["severity"]
+                if sev and d.get(sev) is not None:
+                    rec["severityText"] = str(d[sev])
+                logs.append(rec)
     payloads = []
-    for res_key, (metrics, spans) in by_res.items():
+    for res_key, (metrics, spans, logs) in by_res.items():
         res = {
             "attributes": [
                 {"key": k, "value": {"stringValue": v}} for k, v in res_key
@@ -295,6 +325,10 @@ def rows_to_otlp(rows, resource: dict, containers: list) -> list:
         if spans:
             payloads.append(
                 {"resourceSpans": [{"resource": res, "scopeSpans": [{"spans": spans}]}]}
+            )
+        if logs:
+            payloads.append(
+                {"resourceLogs": [{"resource": res, "scopeLogs": [{"logRecords": logs}]}]}
             )
     return payloads
 

@@ -59,11 +59,10 @@ def spread_if_narrow(df: DataFrame, target: int | None = None) -> DataFrame:
     """Round-robin ``df`` to ``target`` partitions ONLY when its planned
     partition count is lower — the single-row-group-file escape hatch.
     No-op (and no added exchange) whenever the source already feeds the
-    cluster, so it is safe on any scale path."""
+    cluster, so it is safe on any scale path. The count is read off the
+    frame's own physical plan (the RDD its execution would run), with no
+    Python RDD built around it."""
     if target is None:
         target = shuffle_partitions(df)
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # planning-only failure → leave the frame alone
-        return df
+    n = df._jdf.queryExecution().toRdd().getNumPartitions()
     return df.repartition(target) if n < target else df

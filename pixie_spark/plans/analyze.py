@@ -171,9 +171,9 @@ EXEC_SUMMARY_SCHEMA = (
 
 
 def _summarize_rows(df: DataFrame, rows: list[Row], n_out, wall_ms) -> DataFrame:
-    """Fold walked plan rows into the one-row basic-stats frame shared by
-    :func:`exec_summary` (fresh execution) and
-    :func:`summarize_execution` (a consumer's prior execution)."""
+    """Fold walked plan rows into :func:`summarize_execution`'s one-row
+    basic-stats frame, after a fresh execution or a consumer's prior
+    one."""
     scans = [
         r
         for r in rows
@@ -197,25 +197,16 @@ def _summarize_rows(df: DataFrame, rows: list[Row], n_out, wall_ms) -> DataFrame
     )
 
 
-def was_executed(df: DataFrame) -> bool:
-    """True when ``df``'s OWN QueryExecution has already run (a consumer
-    collected/wrote THIS Dataset object, so its SQLMetric accumulators
-    ticked). Spark initializes sum metrics to 0 and size/timing metrics
-    to -1; any positive value means an execution happened. A plan whose
-    every metric is still at its init value reads as not-executed —
-    for a genuinely empty source that conservatively re-executes (cheap
-    by construction: it produced nothing)."""
-    if df.isStreaming:
-        return False
-    rows: list[Row] = []
-    _walk(df._jdf.queryExecution().executedPlan(), 0, set(), rows)
-    return any(v > 0 for r in rows for v in r.metrics.values())
-
-
 def summarize_execution(df: DataFrame, execute: bool = True) -> DataFrame:
     """Basic exec stats off the frame's OWN QueryExecution — the wiring
     the reference attaches to EVERY query result even at analyze=false
-    (``carnot.cc:455-462``). If a consumer already executed this exact
+    (``carnot.cc:455-462``): one row of (rows_processed,
+    bytes_processed, rows_output, wall_ms, n_scans).
+
+    rows_processed / bytes_processed sum the source nodes' output-row
+    and files-read-size metrics (file scans report bytes; in-memory
+    sources — Range, LocalTableScan, InMemoryTableScan — count toward
+    rows and n_scans with 0 bytes). If a consumer already executed this exact
     Dataset (``collect``/``toPandas`` run the Dataset's own
     QueryExecution), the accumulated metrics are summarized with NO new
     Spark job; otherwise one distributed pass runs iff ``execute``
@@ -224,7 +215,8 @@ def summarize_execution(df: DataFrame, execute: bool = True) -> DataFrame:
     execution: the consumer's wall time wasn't ours to measure.
     ``rows_output`` likewise comes from the root node's metric when
     available (a collect()'s true return count isn't observable after
-    the fact)."""
+    the fact); after a fresh pass it is the count the execution itself
+    returned, so a limit-rooted plan reports its limit."""
     import time
 
     if df.isStreaming:
@@ -268,7 +260,7 @@ STREAM_STATS_SCHEMA = (
 
 def stream_stats(query) -> DataFrame:
     """Per-micro-batch runtime stats for an active (or stopped)
-    ``StreamingQuery`` — the streaming face of :func:`exec_summary`.
+    ``StreamingQuery`` — the streaming face of :func:`summarize_execution`.
 
     The reference's streaming queries report the same exec stats over
     their result stream as batch queries do per-result
@@ -320,29 +312,3 @@ def stream_stats(query) -> DataFrame:
             )
         )
     return _local_frame(spark, out, STREAM_STATS_SCHEMA)
-
-
-def exec_summary(df: DataFrame) -> DataFrame:
-    """The BASIC exec stats the reference attaches to every query result
-    even when analyze=false (``carnot.cc:455-462``: rows_processed /
-    bytes_processed per agent, plus the result row count): one row of
-    (rows_processed, bytes_processed, rows_output, wall_ms, n_scans).
-
-    rows_processed / bytes_processed sum the source nodes' output-row
-    and files-read-size metrics (file scans report bytes; in-memory
-    sources — Range, LocalTableScan, InMemoryTableScan — count toward
-    rows and n_scans with 0 bytes); rows_output is the EXECUTED result
-    cardinality (the count the execution itself returned — a
-    limit-rooted plan reports its limit, not a child node's metric).
-    Executes the frame once, like :func:`analyze`."""
-    import time
-
-    if df.isStreaming:
-        raise ValueError("exec_summary() executes a batch plan")
-    jqe = df._jdf.queryExecution()
-    t0 = time.time()
-    n_out = jqe.toRdd().count()
-    wall_ms = round((time.time() - t0) * 1000, 1)
-    rows: list[Row] = []
-    _walk(jqe.executedPlan(), 0, set(), rows)
-    return _summarize_rows(df, rows, n_out, wall_ms)

@@ -11,19 +11,19 @@ flags) mapped onto Structured Streaming.
   event-time windows give the same results with a documented difference:
   late rows beyond the watermark are dropped rather than flushed into a
   stale window.
-- ``otel_export`` / ``display_stream``: GRPCSink/OTelExportSink
-  equivalents via foreachBatch + foreachPartition (otel_export_sink_node.cc
-  re-expressed as executor-side partition exporters writing OTLP-shaped
-  JSON; swap the per-partition writer for a real OTLP exporter in
-  production — export bandwidth scales with the cluster, nothing funnels
-  through the driver).
+- ``display_stream``: the GRPCSink equivalent, an in-memory sink.
+- ``_otel_sink``: the executor-side tail of ``px.export`` (the
+  OTelExportSink, otel_export_sink_node.cc), for batch and streaming
+  frames alike: foreachBatch + foreachPartition partition exporters
+  write OTLP-shaped JSON or post it to an OTLP/HTTP collector, so
+  export bandwidth scales with the cluster and nothing funnels through
+  the driver.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from functools import partial
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -197,7 +197,6 @@ def display_stream(
 def _partition_exporter(
     convert,
     out_dir: str,
-    prefix: str,
     batch_id: int,
     exporter: Callable | None,
 ):
@@ -225,7 +224,7 @@ def _partition_exporter(
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        path = os.path.join(out_dir, f"{prefix}-{batch_id:06d}-p{pid:04d}.jsonl")
+        path = os.path.join(out_dir, f"export-{batch_id:06d}-p{pid:04d}.jsonl")
         with open(path, "w") as f:
             for p in payloads:
                 f.write(json.dumps(p) + "\n")
@@ -233,194 +232,21 @@ def _partition_exporter(
     return run
 
 
-def _rows_to_otel_metrics(rows, name_col: str, value_col: str, ts_col: str, attr_cols: list[str]):
-    out = []
-    for r in rows:
-        d = r.asDict()
-        if d.get(value_col) is None or d.get(ts_col) is None:
-            continue  # null metric value/timestamp: skip the point, never kill the sink
-        out.append(
-            {
-                "resourceMetrics": [
-                    {
-                        "scopeMetrics": [
-                            {
-                                "metrics": [
-                                    {
-                                        "name": str(d.get(name_col, name_col)),
-                                        "gauge": {
-                                            "dataPoints": [
-                                                {
-                                                    "timeUnixNano": int(d[ts_col]),
-                                                    "asDouble": float(d[value_col]),
-                                                    "attributes": [
-                                                        {
-                                                            "key": a,
-                                                            "value": {"stringValue": str(d[a])},
-                                                        }
-                                                        for a in attr_cols
-                                                    ],
-                                                }
-                                            ]
-                                        },
-                                    }
-                                ]
-                            }
-                        ]
-                    }
-                ]
-            }
-        )
-    return out
-
-
-def _rows_to_otel_spans(rows, name_col: str, start_col: str, end_col: str, attr_cols: list[str]):
-    out = []
-    for r in rows:
-        d = r.asDict()
-        if d.get(start_col) is None or d.get(end_col) is None:
-            continue  # unclosed/unstamped span: skip, never kill the sink
-        out.append(
-            {
-                "resourceSpans": [
-                    {
-                        "scopeSpans": [
-                            {
-                                "spans": [
-                                    {
-                                        "name": str(d.get(name_col, name_col)),
-                                        "startTimeUnixNano": int(d[start_col]),
-                                        "endTimeUnixNano": int(d[end_col]),
-                                        "attributes": [
-                                            {"key": a, "value": {"stringValue": str(d[a])}}
-                                            for a in attr_cols
-                                        ],
-                                    }
-                                ]
-                            }
-                        ]
-                    }
-                ]
-            }
-        )
-    return out
-
-
 def _otel_sink(
-    df: DataFrame,
-    out_dir: str,
-    convert: Callable,
-    prefix: str,
-    output_mode: str,
-    checkpoint_dir: str | None,
-    exporter: Callable | None,
+    df: DataFrame, convert: Callable, out_dir: str, batch: int, exporter: Callable | None
 ):
-    """The OTel sinks' shared tail: ``convert(rows)`` maps each
-    partition's rows to OTLP-JSON payloads executor-side, written as
-    ``{prefix}`` files under ``out_dir`` (or handed to ``exporter``). A
-    streaming frame becomes a foreachBatch query in ``output_mode``; a
-    batch frame is exported once, as batch 0."""
-    os.makedirs(out_dir, exist_ok=True)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.foreachPartition(
-            _partition_exporter(convert, out_dir, prefix, batch_id, exporter)
-        )
-
+    """``px.export``'s executor-side tail, one for batch and streaming
+    frames: ``convert(rows)`` maps each partition's rows to OTLP-JSON
+    payloads, written as JSONL under ``out_dir`` (or handed to
+    ``exporter``). A batch frame is exported once, its files named after
+    ``batch``; a streaming frame becomes a foreachBatch query in update
+    mode, its files named after each micro-batch id, and the started
+    query is returned."""
     if df.isStreaming:
-        writer = df.writeStream.foreachBatch(sink).outputMode(output_mode)
-        if checkpoint_dir:
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        return writer.start()
-    sink(df, 0)
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            batch_df.foreachPartition(_partition_exporter(convert, out_dir, batch_id, exporter))
+
+        return df.writeStream.foreachBatch(sink).outputMode("update").start()
+    df.foreachPartition(_partition_exporter(convert, out_dir, batch, exporter))
     return None
-
-
-def otel_export_spans(
-    df: DataFrame,
-    out_dir: str,
-    name_col: str,
-    start_col: str = "time_",
-    end_col: str = "end_time_",
-    attr_cols: list[str] | None = None,
-    checkpoint_dir: str | None = None,
-    exporter: Callable | None = None,
-):
-    """OTel SPANS export (ref: otel_export_sink_node.cc span config,
-    plan.proto OTelSpan) — same foreachBatch plumbing as metrics; a span
-    per row with [start, end] ns and attribute columns."""
-    convert = partial(
-        _rows_to_otel_spans,
-        name_col=name_col, start_col=start_col, end_col=end_col,
-        attr_cols=attr_cols or [],
-    )
-    return _otel_sink(df, out_dir, convert, "spans", "append", checkpoint_dir, exporter)
-
-
-def _rows_to_otel_logs(rows, body_col: str, ts_col: str, severity_col: str | None, attr_cols: list[str]):
-    out = []
-    for r in rows:
-        d = r.asDict()
-        if d.get(ts_col) is None or d.get(body_col) is None:
-            continue
-        rec = {
-            "timeUnixNano": int(d[ts_col]),
-            "body": {"stringValue": str(d[body_col])},
-            "attributes": [
-                {"key": a, "value": {"stringValue": str(d[a])}} for a in attr_cols
-            ],
-        }
-        if severity_col and d.get(severity_col) is not None:
-            rec["severityText"] = str(d[severity_col])
-        out.append({"resourceLogs": [{"scopeLogs": [{"logRecords": [rec]}]}]})
-    return out
-
-
-def otel_export_logs(
-    df: DataFrame,
-    out_dir: str,
-    body_col: str,
-    ts_col: str = "time_",
-    severity_col: str | None = None,
-    attr_cols: list[str] | None = None,
-    checkpoint_dir: str | None = None,
-    exporter: Callable | None = None,
-):
-    """OTel LOGS export (ref: otel_export_sink_node.cc log config) —
-    completes the metrics/spans/logs sink triple; same foreachBatch
-    plumbing, one log record per row."""
-    convert = partial(
-        _rows_to_otel_logs,
-        body_col=body_col, ts_col=ts_col, severity_col=severity_col,
-        attr_cols=attr_cols or [],
-    )
-    return _otel_sink(df, out_dir, convert, "logs", "append", checkpoint_dir, exporter)
-
-
-def otel_export(
-    df: DataFrame,
-    out_dir: str,
-    value_col: str,
-    ts_col: str = "time_",
-    name_col: str = "metric",
-    attr_cols: list[str] | None = None,
-    checkpoint_dir: str | None = None,
-    exporter: Callable | None = None,
-):
-    """px.export(df, px.otel.Data(...)) equivalent
-    (ref: otel_export_sink_node.cc, plan.proto:365-549).
-
-    foreachBatch + foreachPartition map each micro-batch's rows to
-    OTLP-JSON metric payloads ON THE EXECUTORS; the default exporter
-    writes them as JSONL under out_dir (one file per batch+partition).
-    Pass a picklable ``exporter(payloads)`` to ship over real OTLP/gRPC
-    instead — it runs once per partition, executor-side, so export
-    bandwidth scales with the cluster instead of bottlenecking on the
-    driver.
-    """
-    convert = partial(
-        _rows_to_otel_metrics,
-        name_col=name_col, value_col=value_col, ts_col=ts_col,
-        attr_cols=attr_cols or [],
-    )
-    return _otel_sink(df, out_dir, convert, "batch", "update", checkpoint_dir, exporter)

@@ -144,9 +144,9 @@ class ScriptRunner:
     (ScriptRunner + per-script runner, script_runner.go:66-401).
 
     ``on_result(script, results_dict, record)`` receives each successful
-    run's named DataFrames — wire it to the OTel export sinks
-    (pixie_spark.streaming.otel_export*) for the reference's export
-    behavior, or to any writer.
+    run's named DataFrames — wire it to ``px.export(df,
+    px.otel.Data(...))`` for the reference's export behavior, or to any
+    writer.
     """
 
     def __init__(

@@ -19,16 +19,15 @@ Spark-first mapping, two tiers:
    Streaming cannot maintain incrementally in one query) run as a
    *streaming-refresh materialized view*: sources are ingested
    continuously via Structured Streaming into an accumulating snapshot
-   (the ring-buffer analogue, with optional retention trimming), and
-   for every micro-batch the verbatim script re-executes over the
-   snapshot, refreshing the named result tables. This matches the
-   reference's semantics exactly — a Carnot streaming script's output
-   at time t is the script evaluated over the ring buffer's contents
-   at time t — while using Spark's scale model: ingestion is
-   distributed, each refresh is a full Catalyst-optimized batch plan
-   over a time-bounded window (NOT over all history), and at 100 TB/day
-   the window-bounded snapshot is the same size the reference's PEM
-   ring buffers would collectively hold.
+   (the ring-buffer analogue), and for every micro-batch the verbatim
+   script re-executes over the snapshot, refreshing the named result
+   tables. This matches the reference's semantics exactly — a Carnot
+   streaming script's output at time t is the script evaluated over the
+   ring buffer's contents at time t — while using Spark's scale model:
+   ingestion is distributed, each refresh is a full Catalyst-optimized
+   batch plan over a time-bounded window (NOT over all history), and at
+   100 TB/day the window-bounded snapshot is the same size the
+   reference's PEM ring buffers would collectively hold.
 
    Ingestion and refresh are two stages, as Stirling's writes and
    Carnot's reads of the table store are (src/table_store/table/
@@ -69,7 +68,7 @@ _JOB_PROPS = ("spark.jobGroup.id", "spark.job.description")
 class RefreshTiming(NamedTuple):
     """One refresh as the worker ran it."""
 
-    batch_id: int  # the micro-batch that handed it off
+    batch_id: int  # the micro-batch that handed it off; -1 for a restart's first
     bounds: dict  # stream table -> last batch id it read
     wait_s: float  # batch written -> refresh start (sink blocking included)
     run_s: float  # refresh start -> results collected and on_refresh returned
@@ -80,8 +79,9 @@ class StreamingScriptRun:
 
     For each entry in ``stream_tables`` the batch fixture frame is laid
     out as ordered parquet chunks (simulating arrival), read back with
-    ``readStream`` (``max_files_per_trigger`` files per micro-batch,
-    preserving time order) and appended to an accumulating snapshot dir.
+    ``readStream`` (one file per micro-batch, preserving time order) and
+    appended to an accumulating snapshot dir. ``ctx[...]`` in the script
+    resolves against the metadata resolver bound by ``px.set_context``.
 
     Two stages. The ``foreachBatch`` sink only appends its micro-batch
     and hands off a refresh bounded at the batch ids written so far; one
@@ -96,6 +96,10 @@ class StreamingScriptRun:
     ``results`` always holds the latest refresh's named outputs
     (collected rows — a stable copy, immune to later appends), and
     ``refresh_timings`` one :class:`RefreshTiming` per refresh run.
+
+    A run started on a ``work_dir`` whose snapshot already holds batches
+    (a restart) first refreshes once at those bounds, so its ``results``
+    cover what earlier runs ingested even if no new batch arrives.
     """
 
     def __init__(
@@ -105,11 +109,8 @@ class StreamingScriptRun:
         stream_tables: dict[str, DataFrame],
         static_tables: dict[str, DataFrame],
         work_dir: str,
-        metadata=None,
         calls=None,
         chunks: int = 4,
-        max_files_per_trigger: int = 1,
-        retention_ns: Optional[int] = None,
         time_col: str = "time_",
         on_refresh: Optional[Callable[[dict], None]] = None,
     ):
@@ -118,10 +119,7 @@ class StreamingScriptRun:
         self._spark = spark
         self._script = script
         self._static = dict(static_tables)
-        self._metadata = metadata
         self._calls = calls
-        self._retention_ns = retention_ns
-        self._time_col = time_col
         self._on_refresh = on_refresh
         self._work = work_dir
         self._queries = []
@@ -161,13 +159,17 @@ class StreamingScriptRun:
             ids = _list_batch_ids(spark, self._accum(name))
             if ids:
                 self._written[name] = ids[-1]
+        if self._written:
+            # a restart: refresh what the snapshot holds before any new
+            # batch arrives (batch_id -1: no micro-batch handed it off)
+            self._pending.append((-1, dict(self._written), {}, time.perf_counter()))
 
         for name in stream_tables:
             src = os.path.join(work_dir, "src", name)
             ckpt = os.path.join(work_dir, "ckpt", name)
             stream = (
                 spark.readStream.schema(self._schemas[name])
-                .option("maxFilesPerTrigger", max_files_per_trigger)
+                .option("maxFilesPerTrigger", 1)
                 .parquet(src)
             )
             q = (
@@ -259,19 +261,12 @@ class StreamingScriptRun:
         # alone would relax nullability); Spark appends the undeclared
         # batch_id partition column after it — pruned to this refresh's
         # bound, then dropped
-        df = (
+        return (
             self._spark.read.schema(self._schemas[name])
             .parquet(self._accum(name))
             .where(F.col(BATCH_COL) <= upto)
             .drop(BATCH_COL)
         )
-        if self._retention_ns is not None:
-            # ring-buffer retention: scripts only ever see the window
-            import pixie_spark.api as px
-
-            lo = (px.now() or 0) - self._retention_ns
-            df = df.where(F.col(self._time_col) >= F.lit(lo))
-        return df
 
     def _refresh(self, bounds: dict[str, int]) -> None:
         import pixie_spark.api as px
@@ -291,7 +286,7 @@ class StreamingScriptRun:
 
     # -- lifecycle ------------------------------------------------------------
 
-    def await_drained(self, timeout_s: float = 120.0) -> "StreamingScriptRun":
+    def await_drained(self) -> "StreamingScriptRun":
         """Block until every source file is ingested and every refresh
         handed off has run, then stop the ingestion queries and the
         worker."""

@@ -100,10 +100,10 @@ def test_px_debug_analyze_registers_and_returns_frame(spark, sf_dir):
 def test_exec_summary_basic_stats(spark, sf_dir):
     """The basic exec stats the reference sends even with analyze=false
     (carnot.cc:455-462): rows/bytes processed across scans + result
-    cardinality in one row."""
-    from pixie_spark.plans.analyze import exec_summary
+    cardinality in one row, from one fresh pass over an unexecuted frame."""
+    from pixie_spark.plans.analyze import summarize_execution
 
-    row = exec_summary(_flagship(spark, sf_dir)).collect()[0]
+    row = summarize_execution(_flagship(spark, sf_dir)).collect()[0]
     assert row["n_scans"] == 2  # lineitem + orders
     assert row["rows_processed"] >= 6000 + 1500
     assert row["bytes_processed"] > 0
@@ -117,9 +117,9 @@ def test_exec_summary_limit_root_and_inmemory_source(spark):
     a node-metric heuristic reported a child's partial count); (2)
     non-file sources (Range here) must still count toward
     rows_processed/n_scans instead of silently reporting 0."""
-    from pixie_spark.plans.analyze import exec_summary
+    from pixie_spark.plans.analyze import summarize_execution
 
-    row = exec_summary(spark.range(0, 1000).limit(5)).collect()[0]
+    row = summarize_execution(spark.range(0, 1000).limit(5)).collect()[0]
     assert row["rows_output"] == 5
     assert row["n_scans"] == 1
     assert row["rows_processed"] > 0
@@ -142,12 +142,12 @@ def test_summarize_execution_reuses_consumer_execution(spark, sf_dir):
     stats come from the SAME QueryExecution's accumulators with NO new
     Spark job (the reference attaches these to every result —
     carnot.cc:455-462 — it never re-runs the query for them)."""
-    from pixie_spark.plans.analyze import summarize_execution, was_executed
+    from pixie_spark.plans.analyze import summarize_execution
 
     df = _flagship(spark, sf_dir)
-    assert not was_executed(df)
+    with pytest.raises(ValueError, match="no metric has ticked"):
+        summarize_execution(df, execute=False)  # not executed yet
     df.collect()
-    assert was_executed(df)
     tracker = spark.sparkContext.statusTracker()
     jobs_before = set(tracker.getJobIdsForGroup(None) or [])
     stats = summarize_execution(df, execute=False)

@@ -282,3 +282,17 @@ def test_driver_heap_fits_the_box(spark):
     assert m, conf
     heap_mb = int(m.group(1)) * (1024 if m.group(2) == "g" else 1)
     assert 0 < heap_mb <= total_mb // 2
+
+
+def test_spread_if_narrow_only_spreads_narrow_frames(spark):
+    """spread_if_narrow reads the planned partition count and
+    round-robins only a frame narrower than the target; a frame that
+    already feeds the target is returned as is, with no exchange."""
+    from pixie_spark.partitioning import spread_if_narrow
+
+    narrow = spark.range(0, 100, numPartitions=1)
+    spread = spread_if_narrow(narrow, target=4)
+    assert spread._jdf.queryExecution().toRdd().getNumPartitions() == 4
+    assert sorted(r.id for r in spread.collect()) == list(range(100))
+    wide = spark.range(0, 100, numPartitions=8)
+    assert spread_if_narrow(wide, target=4) is wide

@@ -629,7 +629,6 @@ def test_pxl_facade_fuzz_streaming_duality(spark, fuzz_ctx, tmp_path):
             spark, script,
             stream_tables={"events": ev}, static_tables={"docs": docs},
             work_dir=str(tmp_path / f"fz{i}"),
-            metadata=resolver,
             time_col="event_id",  # chunk arrival keyed on the pk
         )
         try:

@@ -1,5 +1,6 @@
 """Streaming layer: file-source stream → rolling window agg → memory sink;
-OTel export sink; batch/stream duality of the same plan."""
+px.export's OTel sink on batch and streaming frames; batch/stream
+duality of the same plan."""
 
 import json
 import os
@@ -68,29 +69,101 @@ def test_stream_rolling_agg_matches_batch(spark, events_dir, tmp_path):
         q.stop()
 
 
-def test_otel_export_batch(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1_000_000_000, "svc-a", 12.5), (2_000_000_000, "svc-b", 99.0)],
-        ["time_", "service", "latency_ms"],
-    )
-    out_dir = str(tmp_path / "otel")
-    st.otel_export(
-        df.withColumn("metric", F.lit("http.latency")),
-        out_dir,
-        value_col="latency_ms",
-        attr_cols=["service"],
-    )
-    files = os.listdir(out_dir)
-    assert files
-    payloads = [
+def _otlp_payloads(out_dir):
+    return [
         json.loads(line)
-        for f in files
+        for f in sorted(os.listdir(out_dir))
         for line in open(os.path.join(out_dir, f))
     ]
-    assert len(payloads) == 2
-    dp = payloads[0]["resourceMetrics"][0]["scopeMetrics"][0]["metrics"][0]["gauge"]["dataPoints"][0]
-    assert dp["timeUnixNano"] in (1_000_000_000, 2_000_000_000)
-    assert dp["attributes"][0]["key"] == "service"
+
+
+def _attrs(kv):
+    return tuple((a["key"], a["value"]["stringValue"]) for a in kv)
+
+
+def _gauge_export(out_dir):
+    """px.otel.Data exporting latency_ms as the http.latency Gauge, with
+    the service column as a data-point attribute, to a file endpoint."""
+    import pixie_spark.api as px
+
+    return px.otel.Data(
+        resource={"service.name": "api"},
+        data=[
+            px.otel.metric.Gauge(
+                name="http.latency", value="latency_ms", attributes={"service": F.col("service")}
+            )
+        ],
+        endpoint=px.otel.Endpoint(url=f"file://{out_dir}"),
+    )
+
+
+def _gauge_points(out_dir):
+    """Every exported Gauge data point as sorted (name, time, value, attributes)."""
+    return sorted(
+        (m["name"], dp["timeUnixNano"], dp["asDouble"], _attrs(dp["attributes"]))
+        for p in _otlp_payloads(out_dir)
+        for rm in p["resourceMetrics"]
+        for sm in rm["scopeMetrics"]
+        for m in sm["metrics"]
+        for dp in m["gauge"]["dataPoints"]
+    )
+
+
+def test_otel_export_batch(spark, tmp_path):
+    import pixie_spark.api as px
+
+    df = spark.createDataFrame(
+        [
+            (1_000_000_000, "svc-a", 12.5),
+            (2_000_000_000, "svc-b", 99.0),
+            (3_000_000_000, "svc-c", None),
+        ],
+        "time_ long, service string, latency_ms double",
+    )
+    out_dir = str(tmp_path / "otel")
+    assert px.export(df, _gauge_export(out_dir)) is None
+    assert os.listdir(out_dir)
+    # the null latency is skipped, not exported and not a crash
+    assert _gauge_points(out_dir) == [
+        ("http.latency", 1_000_000_000, 12.5, (("service", "svc-a"),)),
+        ("http.latency", 2_000_000_000, 99.0, (("service", "svc-b"),)),
+    ]
+
+
+def test_px_export_stream_equals_batch(spark, tmp_path):
+    """px.export on a streaming frame (parquet chunks read with
+    stream_table, one file per micro-batch) exports exactly the data
+    points the batch export of the same rows does, one micro-batch's
+    files per chunk, and records its query in px.streams()."""
+    import pixie_spark.api as px
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("time_", T.LongType()),
+        T.StructField("service", T.StringType()),
+        T.StructField("latency_ms", T.DoubleType()),
+    ])
+    src = str(tmp_path / "src")
+    for c in range(3):
+        rows = [((10 * c + i) * 1_000_000, f"svc-{i % 2}", float(10 * c + i)) for i in range(5)]
+        rows.append(((10 * c + 9) * 1_000_000, "svc-x", None))
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+
+    stream_dir = str(tmp_path / "stream")
+    stream = st.stream_table(spark, src, schema, max_files_per_trigger=1)
+    q = px.export(stream, _gauge_export(stream_dir))
+    try:
+        assert q in px.streams().values()
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    batch_dir = str(tmp_path / "batch")
+    assert px.export(spark.read.schema(schema).parquet(src), _gauge_export(batch_dir)) is None
+
+    assert {f.split("-")[1] for f in os.listdir(stream_dir)} == {"000000", "000001", "000002"}
+    want = _gauge_points(batch_dir)
+    assert len(want) == 15
+    assert _gauge_points(stream_dir) == want
 
 
 def test_px_stream_flag(spark):
@@ -147,18 +220,33 @@ def test_session_window_stream_matches_batch_sessionize(spark, events_dir, tmp_p
 
 
 def test_otel_span_export_batch(spark, tmp_path):
+    import pixie_spark.api as px
+
     out_dir = str(tmp_path / "otel_spans")
     df = spark.createDataFrame(
-        [(1_000, 5_000, "GET /api", "frontend")],
-        ["time_", "end_time_", "span_name", "service"],
+        [(1_000, 5_000, "GET /api", "frontend"), (2_000, None, "GET /open", "frontend")],
+        "time_ long, end_time_ long, span_name string, service string",
     )
-    st.otel_export_spans(df, out_dir, name_col="span_name", attr_cols=["service"])
-    files = os.listdir(out_dir)
-    assert files
-    p = json.loads(open(os.path.join(out_dir, files[0])).readline())
-    span = p["resourceSpans"][0]["scopeSpans"][0]["spans"][0]
+    px.export(df, px.otel.Data(
+        resource={"service.name": "frontend"},
+        data=[px.otel.trace.Span(
+            name=F.col("span_name"), start_time="time_", end_time="end_time_",
+            attributes={"service": F.col("service")},
+        )],
+        endpoint=px.otel.Endpoint(url=out_dir),
+    ))
+    spans = [
+        s
+        for p in _otlp_payloads(out_dir)
+        for rs in p["resourceSpans"]
+        for ss in rs["scopeSpans"]
+        for s in ss["spans"]
+    ]
+    assert len(spans) == 1  # the span without an end is skipped
+    span = spans[0]
     assert span["name"] == "GET /api"
     assert span["endTimeUnixNano"] == 5_000 and span["startTimeUnixNano"] == 1_000
+    assert _attrs(span["attributes"]) == (("service", "frontend"),)
 
 
 def test_stream_static_metadata_join(spark, events_dir, tmp_path):
@@ -372,6 +460,35 @@ def test_stop_with_held_refresh_and_blocked_sink_then_resume(spark, tmp_path):
     assert sorted(map(tuple, run2.results["out"])) == want
 
 
+def test_restart_on_a_drained_snapshot_refreshes_it(spark, tmp_path):
+    """A run started on a work_dir whose snapshot already holds every
+    batch has no new micro-batch to hand off a refresh, yet it refreshes
+    once at the snapshot's bounds: its results equal the drained run's."""
+    import pixie_spark.api as px
+    from pixie_spark.streaming.script_stream import StreamingScriptRun
+
+    px.set_context(spark)
+    mk = lambda: StreamingScriptRun(  # noqa: E731
+        spark, ROWS_SCRIPT, stream_tables={"t": _rows_table(spark, 12)}, static_tables={},
+        work_dir=str(tmp_path / "restart"), chunks=3,
+    )
+    run1 = mk()
+    try:
+        run1.await_drained()
+    finally:
+        run1.stop()
+    assert len(run1.results["out"]) == 12
+    run2 = mk()
+    try:
+        run2.await_drained()
+    finally:
+        run2.stop()
+    assert sorted(run2.results["out"]) == sorted(run1.results["out"])
+    assert [(t.batch_id, t.bounds) for t in run2.refresh_timings] == [
+        (-1, run1.refresh_timings[-1].bounds)
+    ]
+
+
 def test_two_stream_tables_final_refresh_equals_batch(spark, tmp_path):
     """Two stream tables feed one worker: every refresh reads both up
     to their own bounds, and the final one equals the batch result."""
@@ -517,23 +634,40 @@ def test_display_passthrough_stream_appends(spark, events_dir, tmp_path):
 
 
 def test_otel_log_export_batch(spark, tmp_path):
+    import pixie_spark.api as px
+
     out_dir = str(tmp_path / "otel_logs")
     df = spark.createDataFrame(
-        [(1_000, "request failed", "ERROR", "api"), (2_000, None, "INFO", "api")],
-        ["time_", "msg", "level", "service"],
+        [
+            (1_000, "request failed", "ERROR", "api"),
+            (2_000, None, "INFO", "api"),
+            (3_000, "ok", None, "api"),
+        ],
+        "time_ long, msg string, level string, service string",
     )
-    st.otel_export_logs(
-        df, out_dir, body_col="msg", severity_col="level", attr_cols=["service"]
+    px.export(df, px.otel.Data(
+        resource={"service.name": "api"},
+        data=[px.otel.log.Log(
+            time="time_", body="msg", severity="level", attributes={"service": F.col("service")},
+        )],
+        endpoint=px.otel.Endpoint(url=f"file://{out_dir}"),
+    ))
+    recs = sorted(
+        (
+            rec
+            for p in _otlp_payloads(out_dir)
+            for rl in p["resourceLogs"]
+            for sl in rl["scopeLogs"]
+            for rec in sl["logRecords"]
+        ),
+        key=lambda r: r["timeUnixNano"],
     )
-    files = os.listdir(out_dir)
-    recs = [
-        json.loads(line)["resourceLogs"][0]["scopeLogs"][0]["logRecords"][0]
-        for f in files
-        for line in open(os.path.join(out_dir, f))
-    ]
-    assert len(recs) == 1  # null body skipped, not crashed
+    assert len(recs) == 2  # null body skipped, not crashed
+    assert [r["timeUnixNano"] for r in recs] == [1_000, 3_000]
     assert recs[0]["body"]["stringValue"] == "request failed"
     assert recs[0]["severityText"] == "ERROR"
+    assert "severityText" not in recs[1]  # null severity: no severity field
+    assert all(_attrs(r["attributes"]) == (("service", "api"),) for r in recs)
 
 
 def test_no_driver_collect_in_streaming_sinks():
