@@ -1,7 +1,8 @@
 """Hadoop-FileSystem helpers shared by the managed sinks.
 
 Every directory listing / deletion / rename in the table-sink and
-streaming-ingest modules goes through the Hadoop FileSystem API (via
+streaming-ingest modules (and the streaming-refresh manifests) goes
+through the Hadoop FileSystem API (via
 the session JVM) instead of ``glob``/``shutil``/``os`` — so the managed
 layouts work against any Spark-supported filesystem whose connector is
 on the classpath (file:, hdfs:, and with the matching jars s3a:/gs:/
@@ -107,6 +108,34 @@ def rename(spark: SparkSession, src: str, dst: str) -> None:
     fs, jsrc = fs_for(spark, src)
     if not fs.rename(jsrc, jpath(spark, dst)):
         raise RuntimeError(f"filesystem rename failed: {src} -> {dst}")
+
+
+def commit_text(spark: SparkSession, path: str, text: str) -> None:
+    """Write ``text`` to ``path`` once, atomically: the bytes go to a
+    hidden temp file beside it that is then renamed onto ``path``, so a
+    reader sees all of it or nothing (rename is atomic on file:/hdfs:).
+    A ``path`` that already exists is kept as it is — it is an earlier
+    attempt's commit of the same record."""
+    fs, p = fs_for(spark, path)
+    if fs.exists(p):
+        return
+    tmp = jpath(spark, f"{p.getParent().toString()}/.{p.getName()}.tmp")
+    out = fs.create(tmp, True)
+    try:
+        out.write(bytearray(text.encode()))
+    finally:
+        out.close()
+    if not fs.rename(tmp, p):
+        raise RuntimeError(f"filesystem rename failed: {tmp.toString()} -> {path}")
+
+
+def read_text(spark: SparkSession, path: str) -> str:
+    fs, p = fs_for(spark, path)
+    stream = fs.open(p)
+    try:
+        return bytes(stream.readAllBytes()).decode()
+    finally:
+        stream.close()
 
 
 def touch(spark: SparkSession, path: str) -> None:

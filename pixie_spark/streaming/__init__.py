@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -198,6 +199,7 @@ def _partition_exporter(
     convert,
     out_dir: str,
     batch_id: int,
+    token: str,
     exporter: Callable | None,
 ):
     """Build the per-partition export closure that runs ON EXECUTORS.
@@ -208,8 +210,9 @@ def _partition_exporter(
     through the driver (a driver-side collect() serializes 100% of sink
     traffic through one process at scale). ``convert`` and ``exporter``
     must be picklable (module-level functions / simple closures). The
-    default exporter writes one JSONL file per (batch, partition); empty
-    partitions write nothing.
+    default exporter writes one JSONL file per (batch, partition),
+    named after ``token`` too so that exports sharing a directory never
+    overwrite each other; empty partitions write nothing.
     """
 
     def run(rows_iter) -> None:
@@ -224,7 +227,7 @@ def _partition_exporter(
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
-        path = os.path.join(out_dir, f"export-{batch_id:06d}-p{pid:04d}.jsonl")
+        path = os.path.join(out_dir, f"export-{batch_id:06d}-{token}-p{pid:04d}.jsonl")
         with open(path, "w") as f:
             for p in payloads:
                 f.write(json.dumps(p) + "\n")
@@ -241,12 +244,16 @@ def _otel_sink(
     ``exporter``). A batch frame is exported once, its files named after
     ``batch``; a streaming frame becomes a foreachBatch query in update
     mode, its files named after each micro-batch id, and the started
-    query is returned."""
+    query is returned. Every call's files also carry a token of their
+    own, minted here."""
+    token = uuid.uuid4().hex
     if df.isStreaming:
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.foreachPartition(_partition_exporter(convert, out_dir, batch_id, exporter))
+            batch_df.foreachPartition(
+                _partition_exporter(convert, out_dir, batch_id, token, exporter)
+            )
 
         return df.writeStream.foreachBatch(sink).outputMode("update").start()
-    df.foreachPartition(_partition_exporter(convert, out_dir, batch, exporter))
+    df.foreachPartition(_partition_exporter(convert, out_dir, batch, token, exporter))
     return None

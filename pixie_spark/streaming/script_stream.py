@@ -18,8 +18,8 @@ Spark-first mapping, two tiers:
    chained aggregations + joins OF aggregates — shapes Structured
    Streaming cannot maintain incrementally in one query) run as a
    *streaming-refresh materialized view*: sources are ingested
-   continuously via Structured Streaming into an accumulating snapshot
-   (the ring-buffer analogue), and for every micro-batch the verbatim
+   continuously via Structured Streaming into a growing snapshot (the
+   ring-buffer analogue), and for every micro-batch the verbatim
    script re-executes over the snapshot, refreshing the named result
    tables. This matches the reference's semantics exactly — a Carnot
    streaming script's output at time t is the script evaluated over the
@@ -31,15 +31,19 @@ Spark-first mapping, two tiers:
 
    Ingestion and refresh are two stages, as Stirling's writes and
    Carnot's reads of the table store are (src/table_store/table/
-   table.h:104): the micro-batch sink only appends its batch and hands
-   the refresh off, and one refresh worker per run re-executes the
-   script. Each refresh reads every stream table up to the batch ids
-   the sink had written when it handed off (a ``batch_id <= bound``
-   partition filter), so it sees exactly the snapshot a refresh run
-   inside the sink would have seen, however far ingestion has moved
-   on. At most one refresh waits behind the running one; a sink that
-   finds that slot taken blocks, so refresh lag cannot grow without
-   bound.
+   table.h:104). Ingestion copies nothing: each micro-batch is one
+   source file, and the sink only records which one — the file name
+   its batch read — in a per-batch manifest, the way Structured
+   Streaming logs committed files rather than rewriting them. A
+   refresh reads the source files the manifests of the batch ids
+   written when it was handed off name, so it sees exactly the rows
+   a refresh run inside the sink would have seen, however far
+   ingestion has moved on. One worker builds the refreshes in
+   hand-off order, and each built refresh collects on its own thread,
+   so one refresh's collect overlaps the next one's build; they
+   publish strictly in hand-off order. At most ``MAX_IN_FLIGHT`` are
+   handed off and not yet published; a sink that finds that many
+   blocks, so refresh lag cannot grow without bound.
 
 ``StreamingScriptRun`` below implements tier 2.
 """
@@ -54,11 +58,14 @@ from collections import deque
 from typing import Callable, NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from pixie_spark import fsutil
 
 _log = logging.getLogger(__name__)
 
-# refreshes that may wait behind the running one before a sink blocks
-MAX_PENDING_REFRESHES = 1
+# refreshes handed off and not yet published before a sink blocks
+MAX_IN_FLIGHT = 2
 # the sink thread's job attribution (Structured Streaming sets both from
 # the query's runId), re-applied to the refresh the sink hands off so its
 # jobs stay in the query's job group
@@ -66,38 +73,58 @@ _JOB_PROPS = ("spark.jobGroup.id", "spark.job.description")
 
 
 class RefreshTiming(NamedTuple):
-    """One refresh as the worker ran it."""
+    """One refresh as it was built, collected and published."""
 
     batch_id: int  # the micro-batch that handed it off; -1 for a restart's first
     bounds: dict  # stream table -> last batch id it read
-    wait_s: float  # batch written -> refresh start (sink blocking included)
-    run_s: float  # refresh start -> results collected and on_refresh returned
+    wait_s: float  # batch written -> build start (sink blocking included)
+    run_s: float  # build start -> published (on_refresh returned)
+    build_s: float  # build start -> the script's result frames built
+    collect_s: float  # frames built -> their rows collected
+
+
+class _Refresh(NamedTuple):
+    seq: int  # hand-off order, which is publication order
+    batch_id: int
+    bounds: dict
+    job: dict  # the handing-off sink's _JOB_PROPS
+    written_at: float
 
 
 class StreamingScriptRun:
     """Continuous execution of a verbatim PxL script over file streams.
 
     For each entry in ``stream_tables`` the batch fixture frame is laid
-    out as ordered parquet chunks (simulating arrival), read back with
-    ``readStream`` (one file per micro-batch, preserving time order) and
-    appended to an accumulating snapshot dir. ``ctx[...]`` in the script
+    out as ordered parquet chunks under ``work_dir/src/<table>``
+    (simulating arrival) and read back with ``readStream``, one file per
+    micro-batch, preserving time order. ``ctx[...]`` in the script
     resolves against the metadata resolver bound by ``px.set_context``.
 
-    Two stages. The ``foreachBatch`` sink only appends its micro-batch
-    and hands off a refresh bounded at the batch ids written so far; one
-    worker thread per run takes the refreshes in order and re-runs the
-    script over the snapshot up to those bounds, so a refresh sees the
-    same rows whenever it runs. There is one refresh, and one
-    ``on_refresh(results)`` call, per committed micro-batch, in commit
-    order. ``on_refresh`` runs on the worker thread. At most
-    ``MAX_PENDING_REFRESHES`` wait behind the running refresh; a sink
-    that finds them taken blocks until the worker catches up.
+    Two stages. The ``foreachBatch`` sink copies no rows: it reads the
+    name of the file its micro-batch came from (one row) and commits it
+    as the batch's manifest, ``work_dir/accum/<table>/<batch_id>``
+    (empty when the file holds no rows), then hands off a refresh
+    bounded at the batch ids written so far. A refresh's snapshot is the
+    declared schema over the files its bounds' manifests name, so it
+    reads the same rows whenever it runs. One worker thread builds the
+    refreshes in hand-off order (``px.register_table`` and
+    ``run_script`` use process-global state); each built refresh
+    collects on its own thread, so collects overlap the next build.
+    Refreshes publish — ``results``, ``refresh_count``,
+    ``refresh_timings``, ``refresh_errors`` and one
+    ``on_refresh(results)`` call — strictly in hand-off order: one per
+    committed micro-batch, in commit order. ``on_refresh`` runs on the
+    publishing refresh's collect thread, and the next refresh publishes
+    after it returns. At most ``MAX_IN_FLIGHT`` refreshes are handed off
+    and not yet published; a sink that finds that many blocks until the
+    oldest publishes.
 
-    ``results`` always holds the latest refresh's named outputs
-    (collected rows — a stable copy, immune to later appends), and
-    ``refresh_timings`` one :class:`RefreshTiming` per refresh run.
+    ``results`` always holds the latest published refresh's named
+    outputs (collected rows — a stable copy, immune to later appends),
+    and ``refresh_timings`` one :class:`RefreshTiming` per published
+    refresh.
 
-    A run started on a ``work_dir`` whose snapshot already holds batches
+    A run started on a ``work_dir`` whose manifests already name batches
     (a restart) first refreshes once at those bounds, so its ``results``
     cover what earlier runs ingested even if no new batch arrives.
     """
@@ -114,8 +141,6 @@ class StreamingScriptRun:
         time_col: str = "time_",
         on_refresh: Optional[Callable[[dict], None]] = None,
     ):
-        from pixie_spark.streaming.ingest import _list_batch_ids
-
         self._spark = spark
         self._script = script
         self._static = dict(static_tables)
@@ -124,12 +149,17 @@ class StreamingScriptRun:
         self._work = work_dir
         self._queries = []
         self._schemas: dict[str, object] = {}
-        # hand-off state, all under _cv: the last batch id written per
-        # stream table, refreshes not yet started, whether one is running
+        # hand-off state, all under _cv: each stream table's manifests
+        # (batch id -> source file name, "" for a file with no rows) and
+        # last batch id written, refreshes not yet built, and the
+        # hand-off sequence numbers handed off and published so far
         self._cv = threading.Condition()
+        self._files: dict[str, dict[int, str]] = {}
         self._written: dict[str, int] = {}
         self._pending: deque = deque()
-        self._busy = False
+        self._handed = 0
+        self._published = 0
+        self._collectors: list[threading.Thread] = []
         self._stopped = False
         self.results: dict[str, list] = {}
         self.refresh_count = 0
@@ -137,16 +167,16 @@ class StreamingScriptRun:
         self.refresh_timings: list[RefreshTiming] = []
 
         for name, df in stream_tables.items():
-            src = os.path.join(work_dir, "src", name)
+            src = self._src(name)
             # ordered chunks: range-partition on event time so files
             # arrive roughly chronologically, like a live feed. On a
             # RESTART (same work_dir, checkpoint present) the existing
             # files are reused — re-laying them would mint new file
             # names the checkpointed file source treats as unseen,
-            # double-ingesting everything. Reuse is keyed on _SUCCESS
-            # (written at JOB commit): a crash mid-layout leaves part
-            # files but no marker, and must re-lay rather than stream a
-            # truncated source.
+            # double-ingesting everything (and orphan the manifests).
+            # Reuse is keyed on _SUCCESS (written at JOB commit): a
+            # crash mid-layout leaves part files but no marker, and
+            # must re-lay rather than stream a truncated source.
             if not os.path.exists(os.path.join(src, "_SUCCESS")):
                 (
                     df.repartitionByRange(chunks, time_col)
@@ -155,22 +185,28 @@ class StreamingScriptRun:
                     .parquet(src)
                 )
             self._schemas[name] = df.schema
-            # a restart's refreshes also read what the last run appended
-            ids = _list_batch_ids(spark, self._accum(name))
-            if ids:
-                self._written[name] = ids[-1]
+            # a restart's refreshes also read what the last run ingested
+            accum = self._accum(name)
+            self._files[name] = {
+                int(f): fsutil.read_text(spark, f"{accum}/{f}")
+                for f, _ in fsutil.list_files(spark, accum)
+                if f.isdigit()
+            }
+            if self._files[name]:
+                self._written[name] = max(self._files[name])
         if self._written:
-            # a restart: refresh what the snapshot holds before any new
+            # a restart: refresh what the manifests name before any new
             # batch arrives (batch_id -1: no micro-batch handed it off)
-            self._pending.append((-1, dict(self._written), {}, time.perf_counter()))
+            with self._cv:
+                self._hand_off(-1, {}, time.perf_counter())
 
         for name in stream_tables:
-            src = os.path.join(work_dir, "src", name)
             ckpt = os.path.join(work_dir, "ckpt", name)
             stream = (
                 spark.readStream.schema(self._schemas[name])
                 .option("maxFilesPerTrigger", 1)
-                .parquet(src)
+                .parquet(self._src(name))
+                .select(F.col("_metadata.file_name"))
             )
             q = (
                 stream.writeStream.foreachBatch(self._sink(name))
@@ -180,9 +216,12 @@ class StreamingScriptRun:
             self._queries.append(q)
         # hand-offs made before it starts wait in _pending
         self._worker = threading.Thread(
-            target=self._refresh_loop, name="pxl-stream-refresh", daemon=True
+            target=self._build_loop, name="pxl-stream-build", daemon=True
         )
         self._worker.start()
+
+    def _src(self, name: str) -> str:
+        return os.path.join(self._work, "src", name)
 
     def _accum(self, name: str) -> str:
         return os.path.join(self._work, "accum", name)
@@ -190,85 +229,99 @@ class StreamingScriptRun:
     # -- stage 1: ingestion ---------------------------------------------------
 
     def _sink(self, name: str):
-        from pixie_spark.streaming.ingest import _write_batch
-
         accum = self._accum(name)
-        sc = self._spark.sparkContext
+        spark = self._spark
+        sc = spark.sparkContext
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            # distributed idempotent append of this micro-batch to the
-            # snapshot: the batch owns its batch_id= partition, so a
-            # kill mid-batch followed by a checkpoint restart REPLACES
-            # the partial partition instead of duplicating rows
-            # (parquet here; Delta on a production cluster)
-            _write_batch(batch_df, accum, batch_id)
+            # maxFilesPerTrigger is 1: the batch is one source file, and
+            # any of its rows names it (none does if the file is empty)
+            first = batch_df.limit(1).collect()
+            file = first[0].file_name if first else ""
+            # atomic and once per batch_id: a checkpoint restart replays
+            # an uncommitted batch over the same file, and keeps the
+            # manifest its first attempt committed
+            fsutil.commit_text(spark, f"{accum}/{batch_id}", file)
             written_at = time.perf_counter()
             job = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
             with self._cv:
+                self._files[name][batch_id] = file
                 self._written[name] = batch_id
-                while len(self._pending) >= MAX_PENDING_REFRESHES and not self._stopped:
+                while self._handed - self._published >= MAX_IN_FLIGHT and not self._stopped:
                     self._cv.wait()
                 if self._stopped:
-                    return  # the rows are appended; a restart refreshes them
-                self._pending.append((batch_id, dict(self._written), job, written_at))
-                self._cv.notify_all()
+                    return  # the manifest is committed; a restart refreshes it
+                self._hand_off(batch_id, job, written_at)
 
         return sink
 
+    def _hand_off(self, batch_id: int, job: dict, written_at: float) -> None:
+        # caller holds _cv
+        self._pending.append(
+            _Refresh(self._handed, batch_id, dict(self._written), job, written_at)
+        )
+        self._handed += 1
+        self._cv.notify_all()
+
     # -- stage 2: refresh -----------------------------------------------------
 
-    def _refresh_loop(self) -> None:
+    def _bind(self, job: dict) -> None:
+        """Give this thread the session and the handing-off sink's job
+        attribution: a new thread's JVM side starts with neither (the
+        sink threads have the stream's)."""
         spark = self._spark
-        sc = spark.sparkContext
-        # this thread's JVM side starts with no active session; the
-        # sink threads have the stream's
         getattr(spark._jvm, "org.apache.spark.sql.classic.SparkSession").setActiveSession(
             spark._jsparkSession
         )
+        for k, v in job.items():
+            spark.sparkContext.setLocalProperty(k, v)
+
+    def _failed(self, batch_id: int, e: Exception) -> str:
+        # called in an except block: logged when it happens (a stopped
+        # run's cancelled jobs are not failures), published in order,
+        # and await_drained raises them all
+        if not self._stopped:
+            _log.exception("streaming refresh failed at batch_id=%d", batch_id)
+        return f"{type(e).__name__}: {e}"
+
+    def _build_loop(self) -> None:
         while True:
             with self._cv:
                 while not (self._pending or self._stopped):
                     self._cv.wait()
                 if self._stopped:
                     return
-                batch_id, bounds, job, written_at = self._pending.popleft()
-                self._busy = True
-                self._cv.notify_all()
+                r = self._pending.popleft()
             start = time.perf_counter()
+            out, error = {}, None
             try:
-                for k, v in job.items():
-                    sc.setLocalProperty(k, v)
-                self._refresh(bounds)
+                self._bind(r.job)
+                out = self._build(r.bounds)
             except Exception as e:  # noqa: BLE001 — surfaced via handle
-                # logged when it happens; await_drained raises them all
-                _log.exception("streaming refresh failed at batch_id=%d", batch_id)
-                self.refresh_errors.append(f"{type(e).__name__}: {e}")
-            finally:
-                end = time.perf_counter()
-                with self._cv:
-                    self.refresh_timings.append(
-                        RefreshTiming(batch_id, bounds, start - written_at, end - start)
-                    )
-                    self._busy = False
-                    self._cv.notify_all()
+                error = self._failed(r.batch_id, e)
+            t = threading.Thread(
+                target=self._collect,
+                args=(r, out, error, start, time.perf_counter()),
+                name=f"pxl-stream-collect-{r.batch_id}",
+                daemon=True,
+            )
+            with self._cv:
+                self._collectors = [c for c in self._collectors if c.is_alive()] + [t]
+            t.start()
 
     def _snapshot(self, name: str, upto: int) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from pixie_spark.streaming.ingest import BATCH_COL
-
-        # declared schema keeps exact table types (partition discovery
-        # alone would relax nullability); Spark appends the undeclared
-        # batch_id partition column after it — pruned to this refresh's
-        # bound, then dropped
-        return (
-            self._spark.read.schema(self._schemas[name])
-            .parquet(self._accum(name))
-            .where(F.col(BATCH_COL) <= upto)
-            .drop(BATCH_COL)
+        with self._cv:
+            files = [f for b, f in self._files[name].items() if b <= upto and f]
+        # declared schema keeps exact table types (reading the files
+        # alone would relax nullability)
+        schema = self._schemas[name]
+        if not files:
+            return self._spark.createDataFrame([], schema)
+        return self._spark.read.schema(schema).parquet(
+            *(os.path.join(self._src(name), f) for f in files)
         )
 
-    def _refresh(self, bounds: dict[str, int]) -> None:
+    def _build(self, bounds: dict[str, int]) -> dict[str, DataFrame]:
         import pixie_spark.api as px
 
         tables = dict(self._static)
@@ -276,24 +329,58 @@ class StreamingScriptRun:
             tables[name] = self._snapshot(name, upto)
         for name, df in tables.items():
             px.register_table(name, df)
-        out = px.run_script(self._script, calls=self._calls)
-        # materialize NOW: later appends must not mutate what this
-        # refresh reported (the reference emits row batches per window)
-        self.results = {k: v.collect() for k, v in out.items()}
-        self.refresh_count += 1
-        if self._on_refresh is not None:
-            self._on_refresh(self.results)
+        return px.run_script(self._script, calls=self._calls)
+
+    def _collect(
+        self, r: _Refresh, out: dict, error: Optional[str], start: float, built: float
+    ) -> None:
+        results = {}
+        if error is None and not self._stopped:
+            try:
+                self._bind(r.job)
+                # materialize NOW: a refresh reports rows (the
+                # reference emits row batches per window), not frames
+                # that re-run the script on each use
+                results = {k: v.collect() for k, v in out.items()}
+            except Exception as e:  # noqa: BLE001 — surfaced via handle
+                error = self._failed(r.batch_id, e)
+        collected = time.perf_counter()
+        with self._cv:
+            while self._published < r.seq and not self._stopped:
+                self._cv.wait()
+            if self._stopped:
+                return  # discarded: nothing publishes once stop() begins
+        try:
+            if error is None:
+                self.results = results
+                self.refresh_count += 1
+                if self._on_refresh is not None:
+                    self._on_refresh(results)
+        except Exception as e:  # noqa: BLE001 — surfaced via handle
+            error = self._failed(r.batch_id, e)
+        end = time.perf_counter()
+        with self._cv:
+            if error is not None:
+                self.refresh_errors.append(error)
+            self.refresh_timings.append(
+                RefreshTiming(
+                    r.batch_id, r.bounds, start - r.written_at, end - start,
+                    built - start, collected - built,
+                )
+            )
+            self._published += 1
+            self._cv.notify_all()
 
     # -- lifecycle ------------------------------------------------------------
 
     def await_drained(self) -> "StreamingScriptRun":
         """Block until every source file is ingested and every refresh
-        handed off has run, then stop the ingestion queries and the
-        worker."""
+        handed off has published, then stop the ingestion queries and
+        the refresh threads."""
         for q in self._queries:
             q.processAllAvailable()
         with self._cv:
-            while (self._pending or self._busy) and self._worker.is_alive():
+            while self._published < self._handed and self._worker.is_alive():
                 self._cv.wait(1.0)
         self.stop()
         if self.refresh_errors:
@@ -301,18 +388,24 @@ class StreamingScriptRun:
         return self
 
     def stop(self) -> None:
-        """Stop ingestion and the refresh worker. Refreshes not yet
-        started are dropped (their rows stay in the snapshot, where a
-        restarted run's refreshes read them); a running one finishes
-        first, and none runs after this returns."""
+        """Stop ingestion and the refresh threads. Refreshes handed off
+        but not yet published — waiting, building or collecting — are
+        discarded (their batches stay in the manifests, where a
+        restarted run's refreshes read them); an ``on_refresh`` already
+        running finishes first, every thread is joined, and nothing
+        publishes after this returns."""
         with self._cv:
             self._stopped = True
             self._pending.clear()
-            self._cv.notify_all()  # releases a sink waiting for a slot
+            self._cv.notify_all()  # releases a blocked sink and waiting publishers
         for q in self._queries:
             try:
                 q.stop()
             except Exception:  # noqa: BLE001 — already stopped
                 pass
-        if threading.current_thread() is not self._worker:
+        me = threading.current_thread()
+        if me is not self._worker:
             self._worker.join()
+        for t in self._collectors:
+            if t is not me:
+                t.join()

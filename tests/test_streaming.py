@@ -4,6 +4,7 @@ duality of the same plan."""
 
 import json
 import os
+import pathlib
 import time
 
 import pytest
@@ -164,6 +165,37 @@ def test_px_export_stream_equals_batch(spark, tmp_path):
     want = _gauge_points(batch_dir)
     assert len(want) == 15
     assert _gauge_points(stream_dir) == want
+
+
+def test_px_exports_sharing_an_endpoint_keep_their_own_files(spark, tmp_path):
+    """Every px.export call names its files with a token of its own: two
+    streaming exports of one 4-row source into one file endpoint leave 8
+    data points, not 4, and a batch export into the same directory adds
+    its own files beside theirs."""
+    import pixie_spark.api as px
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("time_", T.LongType()),
+        T.StructField("service", T.StringType()),
+        T.StructField("latency_ms", T.DoubleType()),
+    ])
+    src = str(tmp_path / "src")
+    rows = [(i * 1_000_000, f"svc-{i}", float(i)) for i in range(4)]
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    out_dir = str(tmp_path / "shared")
+    for _ in range(2):
+        stream = st.stream_table(spark, src, schema, max_files_per_trigger=1)
+        q = px.export(stream, _gauge_export(out_dir))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    assert len(_gauge_points(out_dir)) == 8
+    streamed = set(os.listdir(out_dir))
+    assert px.export(spark.read.schema(schema).parquet(src), _gauge_export(out_dir)) is None
+    assert streamed < set(os.listdir(out_dir))
+    assert len(_gauge_points(out_dir)) == 12
 
 
 def test_px_stream_flag(spark):
@@ -345,10 +377,14 @@ ROWS_SCRIPT = "import px\ndf = px.DataFrame('t')\npx.display(df, 'out')\n"
 
 
 def _batch_rows(spark, accum):
-    """{batch_id: rows} of a run's snapshot directory."""
+    """{batch_id: rows} of a run's manifest directory: the rows of the
+    source file each batch's manifest names (0 when it names none)."""
+    accum = pathlib.Path(accum)
+    src = accum.parent.parent / "src" / accum.name
     return {
-        r["batch_id"]: r["count"]
-        for r in spark.read.parquet(accum).groupBy("batch_id").count().collect()
+        int(m.name): spark.read.parquet(str(src / m.read_text())).count() if m.read_text() else 0
+        for m in accum.iterdir()
+        if m.name.isdigit()
     }
 
 
@@ -381,7 +417,7 @@ def test_held_refresh_sees_its_batch_bounded_snapshot(spark, tmp_path):
     )
     try:
         # batch 2 written: batches 0 and 1 have committed behind the held refresh
-        assert _wait_for(lambda: (work / "accum" / "t" / "batch_id=2").exists())
+        assert _wait_for(lambda: (work / "accum" / "t" / "2").exists())
         assert seen == [len(run.results["out"])] and run.refresh_count == 1
         release.set()
         run.await_drained()
@@ -397,6 +433,10 @@ def test_held_refresh_sees_its_batch_bounded_snapshot(spark, tmp_path):
         (b, {"t": b}) for b in range(len(sizes))
     ]
     assert all(t.wait_s >= 0 and t.run_s > 0 for t in run.refresh_timings)
+    assert all(
+        t.build_s > 0 and t.collect_s > 0 and t.build_s + t.collect_s <= t.run_s
+        for t in run.refresh_timings
+    )
 
 
 def test_stop_with_held_refresh_and_blocked_sink_then_resume(spark, tmp_path):
@@ -433,7 +473,7 @@ def test_stop_with_held_refresh_and_blocked_sink_then_resume(spark, tmp_path):
     run1 = mk(hold)
     stopper = threading.Thread(target=run1.stop)
     try:
-        assert _wait_for(lambda: (work / "accum" / "t" / "batch_id=2").exists())
+        assert _wait_for(lambda: (work / "accum" / "t" / "2").exists())
         stopper.start()
         stopper.join(2)
         assert stopper.is_alive(), "stop() returned while a refresh was still running"
@@ -458,6 +498,192 @@ def test_stop_with_held_refresh_and_blocked_sink_then_resume(spark, tmp_path):
     assert run1.refresh_count == 1 and len(refreshed1) == 1
     assert run2.refresh_count >= 1, "the resumed run ingested nothing"
     assert sorted(map(tuple, run2.results["out"])) == want
+
+
+class _GatedFrame:
+    """A script result whose collect() waits for ``gate`` (when given),
+    then collects ``df`` and appends ``tag`` to ``done``."""
+
+    def __init__(self, df, tag, done, gate=None, entered=None):
+        self.df, self.tag, self.done, self.gate, self.entered = df, tag, done, gate, entered
+
+    def collect(self):
+        if self.entered is not None:
+            self.entered.append(self.tag)
+        if self.gate is not None:
+            self.gate.wait(60)
+        rows = self.df.collect()
+        self.done.append(self.tag)
+        return rows
+
+
+def _gate_run_script(monkeypatch, wrap):
+    """Route the refreshes' px.run_script through ``wrap(n, frame)`` for
+    the n-th build's result frames."""
+    import pixie_spark.api as px
+
+    real = px.run_script
+    builds = []
+
+    def run_script(*a, **kw):
+        n = len(builds)
+        builds.append(n)
+        return {k: wrap(n, v) for k, v in real(*a, **kw).items()}
+
+    monkeypatch.setattr(px, "run_script", run_script)
+
+
+def test_later_refresh_collected_first_still_publishes_second(spark, tmp_path, monkeypatch):
+    """Refreshes overlap but publish in hand-off order: with batch 0's
+    collect held, batch 1's refresh is built and collected first, yet
+    nothing publishes until batch 0's does, and results, on_refresh and
+    refresh_timings all follow batch order."""
+    import threading
+
+    import pixie_spark.api as px
+    from pixie_spark.streaming.script_stream import StreamingScriptRun
+
+    px.set_context(spark)
+    gate = threading.Event()
+    done, published = [], []
+    _gate_run_script(
+        monkeypatch, lambda n, df: _GatedFrame(df, n, done, gate if n == 0 else None)
+    )
+    work = tmp_path / "order"
+    run = StreamingScriptRun(
+        spark, ROWS_SCRIPT, stream_tables={"t": _rows_table(spark, 30)}, static_tables={},
+        work_dir=str(work), chunks=3, on_refresh=lambda r: published.append(len(r["out"])),
+    )
+    try:
+        assert _wait_for(lambda: 1 in done)
+        assert published == [] and run.refresh_count == 0 and run.results == {}
+        gate.set()
+        run.await_drained()
+    finally:
+        gate.set()
+        run.stop()
+    assert done[:2] == [1, 0]
+    sizes = _batch_rows(spark, str(work / "accum" / "t"))
+    assert published == [sum(sizes[b] for b in range(i + 1)) for i in range(len(sizes))]
+    assert [t.batch_id for t in run.refresh_timings] == list(range(len(sizes)))
+    assert run.refresh_count == len(sizes) and len(run.results["out"]) == 30
+
+
+def test_stop_with_two_refreshes_in_flight_publishes_neither(spark, tmp_path, monkeypatch):
+    """stop() while two refreshes are built and collecting discards both:
+    neither publishes, before or after stop() returns, and no thread of
+    the run is left. A resumed run's final refresh equals a batch run."""
+    import threading
+
+    import pixie_spark.api as px
+    from pixie_spark.streaming.script_stream import StreamingScriptRun
+
+    df = _rows_table(spark, 60)
+    px.set_context(spark, tables={"t": df})
+    script = (
+        "import px\ndf = px.DataFrame('t')\n"
+        "df = df.groupby('v').agg(n=('time_', px.count), s=('time_', px.sum))\n"
+        "px.display(df, 'out')\n"
+    )
+    want = sorted(map(tuple, px.run_script(script)["out"].collect()))
+    work = tmp_path / "inflight"
+    gate = threading.Event()
+    entered, done, published = [], [], []
+    _gate_run_script(monkeypatch, lambda n, df: _GatedFrame(df, n, done, gate, entered))
+    mk = lambda on_refresh: StreamingScriptRun(  # noqa: E731
+        spark, script, stream_tables={"t": df}, static_tables={},
+        work_dir=str(work), chunks=6, on_refresh=on_refresh,
+    )
+    run1 = mk(published.append)
+    stopper = threading.Thread(target=run1.stop)
+    try:
+        assert _wait_for(lambda: len(entered) == 2)
+        stopper.start()
+        # release the collects only once stop() has begun
+        assert _wait_for(lambda: run1._stopped)
+        gate.set()
+        stopper.join(60)
+        assert not stopper.is_alive(), "stop() deadlocked"
+    finally:
+        gate.set()
+        if not stopper.is_alive():
+            run1.stop()
+    assert sorted(done) == [0, 1]
+    assert published == [] and run1.refresh_count == 0 and run1.results == {}
+    assert run1.refresh_timings == [] and run1.refresh_errors == []
+    assert [t.name for t in threading.enumerate() if t.name.startswith("pxl-stream")] == []
+    time.sleep(2)
+    assert published == [] and run1.refresh_count == 0
+
+    monkeypatch.undo()
+    run2 = mk(None)
+    try:
+        run2.await_drained()
+    finally:
+        run2.stop()
+        px.register_table("t", df)
+    assert published == [] and run1.refresh_count == 0
+    assert sorted(map(tuple, run2.results["out"])) == want
+
+
+def test_each_batch_reads_one_row_and_copies_nothing(spark, tmp_path, monkeypatch):
+    """The sink reads one row of its batch to learn the batch's source
+    file and writes no rows: with refreshes that run no job, each batch
+    runs exactly one single-task job under the query's group, which
+    writes nothing; no parquet appears under accum, and each batch's
+    manifest names one source file."""
+    import pixie_spark.api as px
+    from pixie_spark.streaming.script_stream import StreamingScriptRun
+
+    px.set_context(spark)
+    monkeypatch.setattr(px, "run_script", lambda *a, **kw: {})
+    work = tmp_path / "manifest"
+    run = StreamingScriptRun(
+        spark, ROWS_SCRIPT, stream_tables={"t": _rows_table(spark, 40)}, static_tables={},
+        work_dir=str(work), chunks=4,
+    )
+    try:
+        run.await_drained()
+    finally:
+        run.stop()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    jobs = tracker.getJobIdsForGroup(str(run._queries[0].runId))
+    assert run.refresh_count == 4 and len(jobs) == 4
+    for j in jobs:
+        (stage,) = tracker.getJobInfo(j).stageIds
+        assert tracker.getStageInfo(stage).numTasks == 1
+        attempt = store.lastStageAttempt(stage)
+        assert attempt.outputRecords() == 0 and attempt.outputBytes() == 0
+    assert [f for _, _, fs in os.walk(work / "accum") for f in fs if f.endswith(".parquet")] == []
+    accum = work / "accum" / "t"
+    manifests = sorted(m for m in os.listdir(accum) if m.isdigit())
+    assert manifests == ["0", "1", "2", "3"]
+    files = {(accum / m).read_text() for m in manifests}
+    assert len(files) == 4 and files <= set(os.listdir(work / "src" / "t"))
+    assert sum(_batch_rows(spark, str(accum)).values()) == 40
+
+
+def test_empty_source_file_records_no_file(spark, tmp_path):
+    """A micro-batch whose source file holds no rows commits an empty
+    manifest, and a refresh whose manifests name no file reads an empty
+    frame of the declared schema."""
+    import pixie_spark.api as px
+    from pixie_spark.streaming.script_stream import StreamingScriptRun
+
+    px.set_context(spark)
+    work = tmp_path / "empty"
+    run = StreamingScriptRun(
+        spark, ROWS_SCRIPT, stream_tables={"t": _rows_table(spark, 0)}, static_tables={},
+        work_dir=str(work), chunks=2,
+    )
+    try:
+        run.await_drained()
+    finally:
+        run.stop()
+    assert (work / "accum" / "t" / "0").read_text() == ""
+    assert run.refresh_count == 1 and run.results == {"out": []}
 
 
 def test_restart_on_a_drained_snapshot_refreshes_it(spark, tmp_path):
